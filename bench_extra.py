@@ -7,6 +7,7 @@ Usage:
   python bench_extra.py --isolate         # noop-sink laps + analysis split
   python bench_extra.py --plans           # dump explain('formatted') to plans/r06
   python bench_extra.py --dedup-breakdown # stage-by-stage dedup_corpus timing
+  python bench_extra.py --python-task-cost # fixed CPU cost of a Python task
 """
 
 from __future__ import annotations
@@ -160,6 +161,82 @@ def dedup_breakdown():
     print("BREAKDOWN " + json.dumps({k: v["min"] for k, v in res.items()}))
 
 
+def python_task_cost(n_tasks: int = 16, reps: int = 3):
+    """Worker CPU-s per Python task of a trivial ``n_tasks``-task
+    ``mapInArrow`` job (warm workers; median of ``reps`` jobs), plus the
+    CPU-s of one ``importlib.invalidate_caches()`` timed inside a worker —
+    PySpark's worker makes that call once per task, and it re-reads the
+    central directory of every zip on the worker's ``sys.path``."""
+    from pyspark.sql import SparkSession
+
+    # appended, not prepended: perfbench/trace.py would shadow stdlib trace
+    sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                 "perfbench"))
+    import host
+
+    def worker_cpu_s() -> float:
+        """User + system CPU seconds of the PySpark daemon and workers in
+        this process tree, including workers the daemon has reaped."""
+        total = 0
+        for pid in host.tree_pids():
+            try:
+                with open(f"/proc/{pid}/cmdline", "rb") as f:
+                    cmd = f.read()
+                # the JVM's command line names pyspark-shell; skip it
+                if b"pyspark.daemon" not in cmd \
+                        and b"pyspark.worker" not in cmd:
+                    continue
+                with open(f"/proc/{pid}/stat") as f:
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue
+            total += sum(int(x) for x in fields[11:15])
+        return total / os.sysconf("SC_CLK_TCK")
+
+    nproc = os.cpu_count()
+    spark = (SparkSession.builder.master(f"local[{nproc}]")
+             .appName("dpf-python-task-cost")
+             .config("spark.driver.memory", "1g")
+             .config("spark.ui.enabled", "false")
+             .getOrCreate())
+
+    def passthrough(batches):
+        yield from batches
+
+    def invalidate_cost(batches):
+        import importlib
+
+        import pyarrow as pa
+        for b in batches:
+            cost = []
+            for _ in range(b.num_rows):
+                t0 = time.process_time()
+                importlib.invalidate_caches()
+                cost.append(time.process_time() - t0)
+            yield pa.RecordBatch.from_arrays([pa.array(cost)], ["cpu_s"])
+
+    def job():
+        spark.range(0, n_tasks, 1, n_tasks).mapInArrow(
+            passthrough, "id long").write.format("noop") \
+            .mode("overwrite").save()
+
+    job()                                   # fork and warm the workers
+    per_task = []
+    for _ in range(reps):
+        c0 = worker_cpu_s()
+        job()
+        per_task.append((worker_cpu_s() - c0) / n_tasks)
+    inv = sorted(r.cpu_s for r in spark.range(0, nproc * 5, 1, nproc)
+                 .mapInArrow(invalidate_cost, "cpu_s double").collect())
+    spark.stop()
+    out = {"nproc": nproc, "tasks": n_tasks,
+           "worker_cpu_s_per_task": round(sorted(per_task)[reps // 2], 4),
+           "worker_cpu_s_per_task_laps": [round(x, 4) for x in per_task],
+           "invalidate_caches_cpu_s": round(inv[len(inv) // 2], 4)}
+    print("PYTHON_TASK_COST " + json.dumps(out))
+    return out
+
+
 if __name__ == "__main__":
     names = [a for a in sys.argv[1:] if not a.startswith("--")] or None
     if "--plans" in sys.argv:
@@ -167,5 +244,7 @@ if __name__ == "__main__":
         dump_plans(names, tag)
     elif "--dedup-breakdown" in sys.argv:
         dedup_breakdown()
+    elif "--python-task-cost" in sys.argv:
+        python_task_cost()
     else:
         isolate(names)

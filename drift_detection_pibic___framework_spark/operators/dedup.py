@@ -869,6 +869,13 @@ def contamination_report(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
 # duplicate-group resolution: connected components over candidate pairs
 # -------------------------------------------------------------------------
 
+def _label_sum(labels: DataFrame):
+    """Exact decimal(38,0) sum of the ``component`` labels; None when Spark
+    returns a null sum."""
+    return labels.agg(F.sum(F.col("component").cast(
+        "decimal(38,0)")).alias("s")).collect()[0][0]
+
+
 def connected_components(pairs: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", max_iter: int = 25) -> DataFrame:
     """Resolve near-duplicate PAIRS into duplicate GROUPS: assign every node
@@ -928,11 +935,7 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     numeric_ids = isinstance(labels.schema["component"].dataType,
                              NumericType)
 
-    def _sum(lbl):
-        return lbl.agg(F.sum(F.col("component").cast(
-            "decimal(38,0)")).alias("s")).collect()[0][0]
-
-    prev_sum = _sum(labels) if numeric_ids else None
+    prev_sum = _label_sum(labels) if numeric_ids else None
     changed = -1
     for _ in range(max_iter):
         prop = (edges.join(labels, edges.s == labels.node)
@@ -942,16 +945,17 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
                       .groupBy("node")
                       .agg(F.min("component").alias("component"))
                       .localCheckpoint(eager=True))
-        if numeric_ids:
-            new_sum = _sum(new_labels)
+        new_sum = _label_sum(new_labels) if numeric_ids else None
+        if new_sum is not None and prev_sum is not None:
             changed = 0 if new_sum == prev_sum else 1
-            prev_sum = new_sum
         else:
+            # a null sum (empty labels, or an overflow under non-ANSI
+            # arithmetic) proves nothing: two nulls are not "unchanged"
             changed = (new_labels.alias("n")
                        .join(labels.alias("o"), "node")
                        .filter(F.col("n.component") != F.col("o.component"))
                        .count())
-        labels = new_labels
+        labels, prev_sum = new_labels, new_sum
         if changed == 0:
             break
     if changed != 0:

@@ -150,7 +150,8 @@ def drift_scores(clips: DataFrame, col: str = "dur_ms", width: float = 100.0,
                  baseline_parts=DEFAULT_BASELINE_PARTS,
                  baseline: DataFrame = None,
                  round_to: int = 6,
-                 _hist: DataFrame = None) -> DataFrame:
+                 _hist: DataFrame = None,
+                 _base_hist: DataFrame = None) -> DataFrame:
     """Per-partition PSI and binned-KS vs the baseline partitions.
 
     PSI = sum over bins of (p - b) * ln(p / b) with EPS-smoothed proportions
@@ -160,11 +161,17 @@ def drift_scores(clips: DataFrame, col: str = "dur_ms", width: float = 100.0,
     ``baseline`` lets the caller source the baseline window from a different
     DataFrame than the partitions under check (single-partition validation
     still compares against the designated baseline partitions on disk).
-    ``_hist`` (internal) lets a composite caller supply the already
-    materialized (part, bin) counts so the raw scan runs once."""
+    ``_hist`` and ``_base_hist`` (internal) let a composite caller supply
+    the already materialized (part, bin) counts of ``clips`` and of
+    ``baseline`` so each raw scan runs once."""
     hist = _hist if _hist is not None else _histogram_once(
         clips, col, width, n_bins)
-    base_src = histogram(baseline, col, width, n_bins) if baseline is not None else hist
+    if _base_hist is not None:
+        base_src = _base_hist
+    elif baseline is not None:
+        base_src = histogram(baseline, col, width, n_bins)
+    else:
+        base_src = hist
     base = (base_src.filter(F.col("part").isin(list(baseline_parts)))
             .groupBy("bin").agg(F.sum("cnt").alias("bcnt")))
     totals = hist.groupBy("part").agg(F.sum("cnt").alias("tot"))
@@ -234,12 +241,15 @@ def drift_scores_with_p(clips: DataFrame, col: str = "dur_ms",
     baseline row counts over the binned values).  The (part, bin) counts
     are materialized ONCE and shared with ``drift_scores`` — previously
     this variant rebuilt its own lazy histogram beside the checkpointed
-    one, costing a second full scan+aggregate per evaluation."""
+    one, costing a second full scan+aggregate per evaluation.  A separate
+    ``baseline`` frame's histogram is likewise materialized once and feeds
+    both the scores and ``n_base``."""
     hist = _histogram_once(clips, col, width, n_bins)
-    scores = drift_scores(clips, col, width, n_bins, baseline_parts,
-                          baseline, round_to, _hist=hist)
-    base_src = (histogram(baseline, col, width, n_bins)
+    base_src = (_histogram_once(baseline, col, width, n_bins)
                 if baseline is not None else hist)
+    scores = drift_scores(clips, col, width, n_bins, baseline_parts,
+                          baseline, round_to, _hist=hist,
+                          _base_hist=base_src)
     totals = hist.groupBy("part").agg(F.sum("cnt").alias("n_part"))
     btot = (base_src.filter(F.col("part").isin(list(baseline_parts)))
             .agg(F.sum("cnt").alias("n_base")))

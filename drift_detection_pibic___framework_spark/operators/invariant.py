@@ -4,12 +4,18 @@ input_hint: "decoded-PCM allclose (SNR>=30dB) + transcript equality ...
 asserted per-row inside an Arrow UDF").
 
 Scale notes (this is the ONLY check that touches the ``bytes`` column):
-- the join with ``clips_ref`` is an equi-join on ``(rid)`` — rid is the
-  row-lineage id (Iceberg v3 row-lineage analog), unique and uniformly
-  distributed, so the shuffle is skew-free; at production scale both sides
-  are bucketed/partitioned identically so the join is co-located;
-- decode + SNR runs in ``mapInPandas`` over Arrow batches: per-clip numpy
-  vector ops, no per-row Python at the Spark row level;
+- the production path is ``invariant_results_filepairs``: ``clips_ref`` is
+  co-located with ``clips`` (same part -> same file and row-group layout),
+  so row groups of each file pair are read in place, packed into ~8k-row
+  Python tasks, and results return through ``mapInArrow`` over a
+  ``spark.range`` source — no join, no shuffle, no per-row pickling;
+- the join formulation (``invariant_results``) is the semantic reference:
+  an equi-join on ``(rid)`` — rid is the row-lineage id (Iceberg v3
+  row-lineage analog), unique and uniformly distributed, so the shuffle is
+  skew-free — feeding ``mapInPandas``;
+- every variant shares one kernel (``_batch_invariant``): per-clip numpy
+  vector ops over bounded sub-chunks, no per-row Python at the Spark row
+  level;
 - the length-consistency check ``len(decoded) == round(dur_ms * rate/1000)``
   takes the store rate as config (sr_hz at production; the fixture's
   STORE_RATE decimation in this sandbox — generators.py docstring).
@@ -229,57 +235,119 @@ def invariant_results_colocated(clips: DataFrame, ref_dir: str,
     return cols.mapInPandas(gen, RESULT_SCHEMA)
 
 
+def _pack_units(units: list, rows_per_task: int) -> list:
+    """Greedy in-order packing of ``(clips_file, ref_file, row_group,
+    n_rows)`` units: a task closes as soon as it holds ``rows_per_task``
+    rows.  Units are never split, so a row group is read by exactly one
+    task; zero-row units carry no work and are dropped."""
+    tasks, cur, rows = [], [], 0
+    for u in units:
+        if not u[3]:
+            continue
+        cur.append(u[:3])
+        rows += u[3]
+        if rows >= rows_per_task:
+            tasks.append(cur)
+            cur, rows = [], 0
+    if cur:
+        tasks.append(cur)
+    return tasks
+
+
+def _align_ref(clips, ref, where: str):
+    """Reorder the ref-side table so row i carries clip row i's rid.  A
+    clip rid absent from the ref slice (or a duplicated ref rid) raises:
+    misaligned payloads would compare the wrong audio."""
+    want = clips.column("rid").to_numpy()
+    have = ref.column("rid").to_numpy()
+    if np.array_equal(want, have):
+        return ref
+    idx = pd.Index(have).get_indexer(want)   # raises on duplicated ref rids
+    if (idx < 0).any():
+        raise KeyError(f"{where}: ref side lacks rid(s) "
+                       f"{want[idx < 0][:5].tolist()}")
+    return ref.take(idx)
+
+
 def invariant_results_filepairs(spark, clips_dir: str, ref_dir: str,
                                 store_rate: int = STORE_RATE,
                                 parts: list = None,
-                                rgs_per_task: int = 2) -> DataFrame:
-    """Optimal physical plan for the pairwise compare: tasks are row-group
-    ranges of co-located (clips, ref) file pairs — both sides are written
-    with the SAME row-group layout (generators.py, 4096 rows/group), so a
-    task reads the same row-group indices from each file and rows align
-    1:1 by rid; zero shuffle; each byte read exactly once, locally.
-    Task count = parts * ceil(row_groups / rgs_per_task), so parallelism
-    scales with data volume, not partition count (the local[8]->local[32]
-    scaling gate needs >> 32 tasks).  This is what a bucketed-by-rid
-    Iceberg layout gives a 1000-executor cluster.  Row parity with
+                                rows_per_task: int = 8192) -> DataFrame:
+    """Optimal physical plan for the pairwise compare: co-located (clips,
+    ref) file pairs are read in place, with no join and no shuffle.  Both
+    sides are written with the SAME row-group layout (generators.py, 4096
+    rows/group), so a unit of work is one row-group index of one file pair;
+    each byte is read exactly once, locally.  This is what a bucketed-by-rid
+    Iceberg layout gives a 1000-executor cluster.
+
+    Tasks are packed by rows: consecutive units (in part order) go into one
+    task until it holds ``rows_per_task`` rows, never splitting a row group.
+    Small partition files therefore share a task, while large files keep
+    two 4,096-row groups per task, so parallelism still scales with data
+    volume.  Each Python task pays a fixed start-up cost (PySpark's worker
+    calls ``importlib.invalidate_caches()`` per task, which re-reads the
+    central directory of every zip on ``sys.path``: ~0.2 CPU-s on a 4-vCPU
+    host, see ``bench_extra.py --python-task-cost``), so fewer, larger
+    tasks are the cheap direction.
+
+    The result comes back through ``mapInArrow`` over a
+    ``spark.range(n_tasks)`` source, one partition per task: each task
+    reads its units with pyarrow, aligns the ref side on rid (a missing rid
+    raises), runs ``_batch_invariant`` and yields one RecordBatch per unit
+    — no per-row pickling and no repartition.  Row parity with
     invariant_results is asserted in tests."""
     import os
 
     import pyarrow.parquet as pq
+    from pyarrow import RecordBatch
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     if parts is None:
         parts = sorted(
             int(f[len("part-"):-len(".parquet")])
             for f in os.listdir(clips_dir)
             if f.startswith("part-") and f.endswith(".parquet"))
-    tasks = []
+    units = []
     for p in parts:
         cf = os.path.join(clips_dir, f"part-{p:04d}.parquet")
         rf = os.path.join(ref_dir, f"part-{p:04d}.parquet")
-        nrg = pq.ParquetFile(cf).metadata.num_row_groups
-        for lo in range(0, nrg, rgs_per_task):
-            tasks.append((cf, rf, list(range(lo, min(lo + rgs_per_task,
-                                                     nrg)))))
+        md = pq.ParquetFile(cf).metadata
+        units += [(cf, rf, g, md.row_group(g).num_rows)
+                  for g in range(md.num_row_groups)]
+    tasks = _pack_units(units, rows_per_task)
+    schema = to_arrow_schema(StructType.fromDDL(RESULT_SCHEMA))
 
-    def run_chunk(task) -> list:
-        cf, rf, rgs = task
-        c = pq.ParquetFile(cf).read_row_groups(
-            rgs, columns=["rid", "clip_id", "part", "bytes", "codec",
-                          "dur_ms", "transcript"]).to_pandas()
-        r = pq.ParquetFile(rf).read_row_groups(
-            rgs, columns=["rid", "bytes", "codec", "transcript"]
-        ).to_pandas().set_index("rid")
-        ref = r.loc[c["rid"]]
-        merged = c.assign(ref_bytes=ref["bytes"].to_numpy(),
-                          ref_codec=ref["codec"].to_numpy(),
-                          ref_transcript=ref["transcript"].to_numpy())
-        out = _batch_invariant(merged, store_rate)
-        return list(out.itertuples(index=False, name=None))
+    def run_task(task):
+        files = {}
 
-    rdd = (spark.sparkContext
-           .parallelize(tasks, numSlices=len(tasks))
-           .flatMap(run_chunk))
-    return spark.createDataFrame(rdd, schema=RESULT_SCHEMA)
+        def read(f, g, cols):
+            if f not in files:
+                files[f] = pq.ParquetFile(f)
+            return files[f].read_row_group(g, columns=cols)
+
+        for cf, rf, g in task:
+            c = read(cf, g, ["rid", "clip_id", "part", "bytes", "codec",
+                             "dur_ms", "transcript"])
+            r = _align_ref(c, read(rf, g, ["rid", "bytes", "codec",
+                                           "transcript"]),
+                           f"{rf} row group {g}")
+            merged = c.to_pandas().assign(
+                ref_bytes=r.column("bytes").to_numpy(zero_copy_only=False),
+                ref_codec=r.column("codec").to_numpy(zero_copy_only=False),
+                ref_transcript=r.column("transcript").to_numpy(
+                    zero_copy_only=False))
+            yield RecordBatch.from_pandas(
+                _batch_invariant(merged, store_rate), schema=schema,
+                preserve_index=False)
+
+    def gen(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from run_task(tasks[i])
+
+    n = len(tasks)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(gen, RESULT_SCHEMA)
 
 
 def invariant_violations(clips: DataFrame, clips_ref: DataFrame,

@@ -226,6 +226,25 @@ def test_ks_pvalue_reuses_one_histogram(spark, clips):
     assert "ExistingRDD" in plan
 
 
+def test_ks_pvalue_separate_baseline_one_histogram(spark, clips):
+    """With a separate ``baseline=`` frame, drift_scores_with_p builds that
+    frame's histogram once and shares it between the scores and n_base:
+    the plan reads only checkpointed counts, and the scores equal
+    drift_scores over the same inputs."""
+    from drift_detection_pibic___framework_spark.operators import drift_dist
+
+    checked = clips.filter("part >= 8")
+    df = drift_dist.drift_scores_with_p(checked, "dur_ms", baseline=clips)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "parquet" not in plan.lower()
+    got = {r.part: (r.psi, r.ks, r.n_base) for r in df.collect()}
+    want = {r.part: (r.psi, r.ks) for r in
+            drift_dist.drift_scores(checked, "dur_ms",
+                                    baseline=clips).collect()}
+    n_base = clips.filter("part < 4").count()
+    assert got == {p: (psi, ks, n_base) for p, (psi, ks) in want.items()}
+
+
 def test_emd_against_numpy_oracle(spark, clips, duck):
     """Binned Wasserstein-1 must match width * sum|CDF gap| recomputed in
     numpy, separate drifted partitions from clean ones, and read roughly

@@ -722,6 +722,25 @@ def test_connected_components_nonconvergence_raises(spark):
     assert got == {(i, 0) for i in range(9)}
 
 
+def test_connected_components_null_label_sum_not_converged(spark,
+                                                           monkeypatch):
+    """Two null label sums are not proof of convergence: with every sum
+    forced to null, the chain must still propagate to its min label (the
+    fallback change count), not stop after the first round with node 4
+    still labelled 2; an empty edge set still returns empty."""
+    from drift_detection_pibic___framework_spark.operators import dedup
+    monkeypatch.setattr(dedup, "_label_sum", lambda labels: None)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)],
+                                  ["doc_a", "doc_b"])
+    got = {(r.node, r.component)
+           for r in dedup.connected_components(pairs).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=1)
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    assert dedup.connected_components(empty).count() == 0
+
+
 # -------------------------------------------------------------------------
 # deterministic sampling
 # -------------------------------------------------------------------------
