@@ -25,11 +25,17 @@ DEFAULT_BASELINE_PARTS = (0, 1, 2, 3)
 EPS = 1e-6
 
 
+def bin_index(col: str, width: float, n_bins: int):
+    """The equal-width bin of ``col``, clamped to [0, n_bins-1].  A null
+    value lands in bin 0 (``greatest`` skips nulls), so every row of a
+    partition is counted in its histogram."""
+    return F.least(F.greatest(F.floor(F.col(col) / F.lit(width)), F.lit(0)),
+                   F.lit(n_bins - 1)).cast("int")
+
+
 def binned(clips: DataFrame, col: str, width: float, n_bins: int) -> DataFrame:
     """Add a ``bin`` column: equal-width, clamped to [0, n_bins-1]."""
-    b = F.least(F.greatest(F.floor(F.col(col) / F.lit(width)), F.lit(0)),
-                F.lit(n_bins - 1)).cast("int")
-    return clips.select("part", b.alias("bin"))
+    return clips.select("part", bin_index(col, width, n_bins).alias("bin"))
 
 
 def histogram(clips: DataFrame, col: str, width: float = 100.0,

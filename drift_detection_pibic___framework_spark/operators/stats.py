@@ -34,9 +34,14 @@ def partition_column_stats(clips: DataFrame,
                            numeric_cols=NUMERIC_COLS,
                            nullable_cols=NULLABLE_COLS,
                            quantiles=QUANTILES,
-                           round_to: int = 6) -> DataFrame:
+                           round_to: int = 6,
+                           extra_aggs: dict = None) -> DataFrame:
     """One row per partition: count + per-column null-rate/mean/stddev/min/
     max/approx-quantiles. Single agg — single shuffle, map-side partials.
+
+    ``extra_aggs`` ({name: aggregate column}) ride the same aggregation
+    and follow the stats columns in the output: the fused check suite
+    (plans/suite.py) adds its per-check counts this way.
 
     All quantiles of a column come from ONE percentile_approx sketch
     evaluated at every probability (optimization round): one GK digest
@@ -62,6 +67,8 @@ def partition_column_stats(clips: DataFrame,
         aggs.append(
             F.round(F.avg(F.when(F.col(c).isNull(), 1.0).otherwise(0.0)),
                     round_to).alias(f"{c}_null_rate"))
+    extra = extra_aggs or {}
+    aggs += [c.alias(n) for n, c in extra.items()]
     g = clips.groupBy("part").agg(*aggs)
     sel = [F.col("part"), F.col("row_count")]
     for c in numeric_cols:
@@ -71,6 +78,7 @@ def partition_column_stats(clips: DataFrame,
                 .alias(f"{c}_p{int(q * 100)}")
                 for i, q in enumerate(qlist)]
     sel += [F.col(f"{c}_null_rate") for c in nullable_cols]
+    sel += [F.col(n) for n in extra]
     return g.select(*sel)
 
 

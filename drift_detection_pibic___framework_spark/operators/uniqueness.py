@@ -35,18 +35,19 @@ def uniqueness_sketches(clips: DataFrame, col: str = "clip_id") -> DataFrame:
 
 def uniqueness_verdicts(clips: DataFrame, col: str = "clip_id",
                         rel_tol: float = 0.02) -> DataFrame:
-    """Per-partition pass/fail: HLL distinct estimate vs exact row count.
+    """Per-partition pass/fail: exact distinct count vs exact row count.
 
-    A partition passes when estimate >= (1 - rel_tol) * count — rel_tol
-    absorbs HLL error (golden matrix: p3/p9 fail at 0.2% injected dups with
-    the default 2%? No: dup rate 0.2% < sketch error, so the *verdict* check
-    uses the exact distinct count per partition; the sketch estimate is
-    emitted alongside as the scale-path metric)."""
+    The verdict needs the EXACT distinct count: the golden matrix injects
+    0.2% duplicate ids (p3/p9), below the HLL sketch's relative error, so
+    an estimate-vs-count comparison with any tolerance that absorbs that
+    error would pass them.  The sketch path (``uniqueness_sketches``,
+    ``global_distinct_estimate``) is the scale metric, not the verdict.
+    Null ids are not counted as distinct values, so a partition holding
+    any null id fails.  ``rel_tol`` is accepted for existing callers and
+    unused: the exact comparison needs no tolerance."""
     per = clips.groupBy("part").agg(
         F.count(F.lit(1)).alias("row_count"),
         F.count_distinct(F.col(col)).alias("exact_distinct"),
-        F.expr(f"hll_sketch_estimate(hll_sketch_agg({col}, {LG_K}))")
-        .alias("hll_estimate"),
     )
     return per.select(
         "part",

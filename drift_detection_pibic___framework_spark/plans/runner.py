@@ -4,14 +4,21 @@ The Spark lifecycle of the reference's per-sample loop (SURVEY §3 entry
 point 1), at Iceberg-partition granularity:
 
   1. driver enumerates unprocessed partitions (manifest left-anti);
-  2. ONE DataFrame job computes all batch checks for every pending partition
-     (stats agg + uniqueness + referential + PSI/KS) — map-side combined,
-     no per-partition job storm;
+  2. the fused check suite (plans/suite.py) makes two aggregation passes
+     over the pending partitions, one filtered scan each: a groupBy(part)
+     carrying the column stats, the codec-miss count and the drift bins,
+     and a two-level (part, clip_id) -> part distinct count.  The drift
+     baseline is summed from the pass-1 rows when every baseline
+     partition is pending, else it costs one bins-only aggregation over
+     the baseline partitions.  The driver finalizes the collected
+     O(parts x (checks + bins)) numbers into verdict rows, and the same
+     rows give the per-partition stats the detector consumes;
   3. the ordered per-partition stat series advances the sequential detector
      steppers (state re-hydrated from the manifest checkpoint — the Spark
      equivalent of the reference's detector state carried across samples,
      /root/reference/utils/StreamProcessor.py:213-215);
-  4. violations are written partition-by-partition (dynamic overwrite =
+  4. violations are listed, per check, only for the partitions whose
+     check failed, and written partition-by-partition (dynamic overwrite =
      idempotent), THEN the manifest row is committed (atomic rename) — the
      commit point, so a kill re-validates exactly the uncommitted suffix
      and outputs are byte-identical to an uninterrupted run (SURVEY §5
@@ -31,7 +38,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import drift_dist, stats
+from ..operators import drift_dist
 from ..operators.detectors import oracle
 from ..operators.detectors.harness import PrequentialStepper
 from ..sources.tableio import ParquetTableIO
@@ -91,16 +98,17 @@ class ValidationRunner:
         clips = clips_all.filter(F.col("part").isin(pending))
         dim = self.io.read_table(spark, "allowed_codecs")
 
-        # ---- one batch job: every check, every pending partition ----------
-        st = stats.partition_column_stats(clips)
-        verdicts = suite.suite_verdicts(
-            clips, dim, baseline=clips_all,
-            baseline_parts=self.baseline_parts, st=st)
-        verdict_rows = verdicts.collect()          # <= parts * checks rows
-        stat_rows = {r["part"]: r.asDict() for r in st.collect()}
-
-        violations = (suite.suite_violations(clips, dim)
-                      .withColumn("run_scope", F.lit(self.scope)))
+        # ---- two passes: every check, every pending partition -----------
+        # when every baseline partition is pending (a backfill) the drift
+        # baseline is summed from the pass-1 rows; otherwise one bins-only
+        # aggregation over the baseline partitions supplies it, so a resume
+        # or incremental run never computes full stats for done partitions
+        baseline = (None if set(self.baseline_parts) <= set(pending)
+                    else clips_all)
+        res = suite.collect_suite(clips, dim, baseline=baseline,
+                                  baseline_parts=self.baseline_parts)
+        stat_rows = res.stats
+        violations = suite.failing_violations(clips, dim, res.verdicts)
 
         # write violations for ALL pending partitions BEFORE any manifest
         # commit (idempotent dynamic overwrite per partition).  Dynamic
@@ -112,15 +120,17 @@ class ValidationRunner:
         out = f"{self.io.root}/{self.violations_table}"
         for p in pending:
             shutil.rmtree(os.path.join(out, f"part={p}"), ignore_errors=True)
-        (violations.repartition("part").write
-         .partitionBy("part").mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic").parquet(out))
+        if violations is not None:
+            (violations.withColumn("run_scope", F.lit(self.scope))
+             .repartition("part").write
+             .partitionBy("part").mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic").parquet(out))
 
         # ---- sequential detector over the ordered partition-stat series ---
         steppers = self._load_steppers(manifest)
         by_part: dict = {}
-        for r in verdict_rows:
-            by_part.setdefault(r["part"], []).append(r)
+        for r in res.verdicts:
+            by_part.setdefault(r.part, []).append(r)
 
         validated, failed = [], []
         base_mean, base_std = self._baseline_moments(stat_rows, manifest)
@@ -136,7 +146,7 @@ class ValidationRunner:
             if mean is None:
                 drift_flag, drift_state = False, oracle.STATE_WARNING
                 all_passed = False
-                check_map = {r["check_name"]: bool(r["passed"])
+                check_map = {r.check_name: bool(r.passed)
                              for r in checks}
                 check_map["has_monitor_stat"] = False
                 state = oracle.STATE_WARNING
@@ -144,9 +154,9 @@ class ValidationRunner:
                 z = abs((mean - base_mean) / (base_std or 1.0))
                 drift_flag, drift_state = self._advance_steppers(
                     steppers, part, z)
-                all_passed = (all(r["passed"] for r in checks)
+                all_passed = (all(r.passed for r in checks)
                               and not drift_flag)
-                check_map = {r["check_name"]: bool(r["passed"])
+                check_map = {r.check_name: bool(r.passed)
                              for r in checks}
                 state = drift_state if drift_flag else (
                     oracle.STATE_NORMAL if all_passed

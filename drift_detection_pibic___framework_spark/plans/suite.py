@@ -1,110 +1,326 @@
 """The check-suite registry — ONE definition site for the validation
 suite (SURVEY §2.10 U1 "Check protocol").
 
-Round 1 had four hand-maintained copies of the same unionByName suite
-(runner, jobs/validate, streaming, bench — VERDICT r1 missing #6); adding
-a check meant editing all four.  Each check here pairs a verdict builder
-with its violation builder (the reference's per-check pass/fail + violation
-rows contract, north_rule) plus flags describing where it can run:
-
-- ``streaming_safe``: computable inside a single micro-batch (no global
-  baseline or cross-batch scan needed);
-- ``needs_baseline``: consumes the baseline window (distribution drift).
-
 Every consumer (batch runner, spark-submit job, structured-streaming
 front-end, bench) builds its suite from ``CHECKS`` via the helpers below.
+Each check pairs a finalizer with its violation builder (the reference's
+per-check pass/fail + violation rows contract, north_rule), names the
+aggregate columns it reads, and says whether it is ``streaming_safe``:
+computable inside a single micro-batch (no global baseline or
+cross-batch scan needed).
+
+Verdicts follow the analyzer model of Deequ (Schelter et al., "Automating
+Large-Scale Data Quality Verification", VLDB 2018): every check's
+aggregates ride two passes over the clips, and the driver turns the
+O(parts x (checks + bins)) collected numbers into verdict rows.
+
+- Pass 1 is ONE ``groupBy(part)`` aggregation over the clips,
+  broadcast-left-joined to the codec dimension. It carries the
+  ``partition_column_stats`` columns, the codec-miss count and the 40
+  drift bins as ``count_if`` columns.
+- Pass 2 is ``groupBy(part, clip_id).count()`` -> ``groupBy(part)``: the
+  exact distinct id count.  It stays a pass of its own: a
+  ``count_distinct`` in pass 1 makes Spark's distinct rewrite (Expand)
+  carry every ``percentile_approx`` buffer at (part, clip_id) grain.
+
+A finalizer maps one partition's aggregate row (plus the baseline
+window's summed bins) to ``(passed, observed, expected)`` in plain
+Python.  ``_jround`` and ``_jstr`` reproduce Spark's ``round(double, 6)``
+and ``CAST(double AS STRING)``, so the rows equal the ones the per-check
+operators build in Spark (tests/test_batch_checks.py keeps that lazy
+union as the oracle).  Evaluating the operators over the collected rows
+instead would cost a Spark job per run: ``createDataFrame`` of local rows
+is RDD-backed, not a local relation.  Violation builders stay lazy plans;
+the runner calls each one only for the partitions whose check failed.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import math
+from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
-from typing import Callable, Optional
+from typing import Callable, NamedTuple, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (ArrayType, BooleanType, StringType,
+                               StructField, StructType)
 
 from ..operators import drift_dist, referential, stats, uniqueness
+
+NULL_RATE_MAX = 0.005
+SR_RANGE = (8000, 48000)
+PSI_MAX = 0.2
+DRIFT_COL, BIN_WIDTH, N_BINS = "dur_ms", 100.0, 40
+BIN_COLS = tuple(f"_bin{i}" for i in range(N_BINS))
+
+
+class Verdict(NamedTuple):
+    part: int
+    check_name: str
+    passed: Optional[bool]
+    observed: Optional[str]
+    expected: str
 
 
 @dataclass
 class CheckContext:
-    """Inputs a check may consume. ``stats`` is the shared per-partition
-    stats frame so the whole suite costs ONE aggregation pass."""
+    """Inputs of a violation builder: the clips to list rows from (the
+    runner narrows them to the partitions whose check failed) and the
+    codec dimension."""
     clips: DataFrame
     dim: DataFrame
-    stats: DataFrame
-    baseline: Optional[DataFrame] = None
-    baseline_parts: tuple = field(
-        default_factory=lambda: tuple(drift_dist.DEFAULT_BASELINE_PARTS))
 
 
 @dataclass(frozen=True)
 class Check:
     name: str                                   # emitted check_name
-    verdicts: Callable[[CheckContext], DataFrame]
+    # "stats" | "misses" | "distinct" | "bins" (bins: the baseline window)
+    aggregates: str
+    # (aggregate row, baseline bins or None) -> (passed, observed, expected)
+    finalize: Callable[[dict, Optional[list]], tuple]
     violations: Optional[Callable[[CheckContext], DataFrame]]
     streaming_safe: bool
-    needs_baseline: bool = False
+
+
+@dataclass(frozen=True)
+class SuiteRun:
+    stats: dict      # part -> partition_column_stats row, in column order
+    verdicts: list   # Verdict per (reported part, check)
+
+
+# -- Spark's double semantics on the driver ---------------------------------
+
+def _jround(x, n: int = 6):
+    """Spark's ``round(double, n)``: HALF_UP on the double's shortest
+    decimal form."""
+    if x is None or math.isnan(x) or math.isinf(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n),
+                                           ROUND_HALF_UP))
+
+
+def _jstr(x):
+    """Spark's ``CAST(double AS STRING)`` (Java ``Double.toString``): plain
+    decimal for 1e-3 <= |x| < 1e7 and zero, ``d.dddE[-]n`` otherwise."""
+    if x is None:
+        return None
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    if x == 0 or 1e-3 <= abs(x) < 1e7:
+        return repr(x)
+    sign, digits, exp = Decimal(repr(x)).normalize().as_tuple()
+    ds = "".join(map(str, digits))
+    return f"{'-' if sign else ''}{ds[0]}.{ds[1:] or '0'}E{exp + len(ds) - 1}"
+
+
+def _sstr(v):
+    return _jstr(v) if isinstance(v, float) else str(v)
+
+
+def psi_ks(counts, tot: int, base) -> tuple:
+    """``drift_dist.drift_scores``' PSI and binned KS of one partition's
+    bin counts against the baseline window's, with the same double
+    operations; (None, None) when the baseline window is empty."""
+    btot = sum(base) if base else 0
+    if not btot:
+        return None, None
+    psi = ks = cp = cb = 0.0
+    for c, bc in zip(counts, base):
+        p, b = c / tot, bc / btot
+        pe, be = p + drift_dist.EPS, b + drift_dist.EPS
+        psi += (pe - be) * math.log(pe / be)
+        cp += p
+        cb += b
+        ks = max(ks, abs(cp - cb))
+    return _jround(psi), _jround(ks)
+
+
+# -- finalizers: one per check ----------------------------------------------
+
+def _null_rate(row, _base):
+    rate = row["transcript_null_rate"]
+    return (None if rate is None else rate <= NULL_RATE_MAX, _jstr(rate),
+            f"<= {NULL_RATE_MAX}")
+
+
+def _range(row, _base):
+    lo, hi = row["sr_hz_min"], row["sr_hz_max"]
+    passed = None if lo is None else (lo >= SR_RANGE[0]
+                                      and hi <= SR_RANGE[1])
+    return (passed, "..".join(_sstr(v) for v in (lo, hi) if v is not None),
+            f"[{SR_RANGE[0]}, {SR_RANGE[1]}]")
+
+
+def _unique(row, _base):
+    d, n = row["clip_id_distinct"], row["row_count"]
+    return d == n, f"{d}/{n}", "distinct == count"
+
+
+def _referential(row, _base):
+    m = row["codec_misses"]
+    return m == 0, f"misses={m}", "misses=0"
+
+
+def _drift(row, base):
+    psi, ks = psi_ks([row[c] for c in BIN_COLS], row["row_count"], base)
+    observed = (None if psi is None or ks is None
+                else f"psi={_jstr(psi)} ks={_jstr(ks)}")
+    return psi is not None and psi <= PSI_MAX, observed, f"psi <= {PSI_MAX}"
 
 
 CHECKS: tuple = (
-    Check("null_rate(transcript)",
-          lambda c: stats.null_rate_verdicts(c.stats),
-          lambda c: stats.null_violations(c.clips),
+    Check("null_rate(transcript)", "stats", _null_rate,
+          lambda c: stats.null_violations(c.clips,
+                                          max_null_rate=NULL_RATE_MAX),
           streaming_safe=True),
-    Check("range(sr_hz)",
-          lambda c: stats.range_verdicts(c.stats, "sr_hz", 8000, 48000),
-          lambda c: stats.range_violations(c.clips, "sr_hz", 8000, 48000),
+    Check("range(sr_hz)", "stats", _range,
+          lambda c: stats.range_violations(c.clips, "sr_hz", *SR_RANGE),
           streaming_safe=True),
-    Check("unique(clip_id)",
-          lambda c: uniqueness.uniqueness_verdicts(c.clips),
+    Check("unique(clip_id)", "distinct", _unique,
           lambda c: uniqueness.duplicate_violations(c.clips),
           streaming_safe=False),      # a partition may span micro-batches
-    Check("referential(codec)",
-          lambda c: referential.referential_verdicts(c.clips, c.dim),
+    Check("referential(codec)", "misses", _referential,
           lambda c: referential.referential_violations(c.clips, c.dim),
           streaming_safe=True),
-    Check("dist_drift(dur_ms)",
-          lambda c: drift_dist.drift_verdicts(
-              c.clips, baseline=c.baseline,
-              baseline_parts=c.baseline_parts),
-          None,
-          streaming_safe=False, needs_baseline=True),
+    Check("dist_drift(dur_ms)", "bins", _drift, None,
+          streaming_safe=False),
 )
+
+
+# -- the two passes ---------------------------------------------------------
+
+def _bin_aggs() -> dict:
+    b = drift_dist.bin_index(DRIFT_COL, BIN_WIDTH, N_BINS)
+    return {c: F.count_if(b == i) for i, c in enumerate(BIN_COLS)}
+
+
+def aggregate_plan(clips: DataFrame, dim: DataFrame, misses: bool = True,
+                   bins: bool = True) -> DataFrame:
+    """Pass 1: ``partition_column_stats`` plus the codec-miss count and
+    the drift bins, one ``groupBy(part)``.  The broadcast side is the
+    dimension's distinct codec set, so a repeated codec row cannot repeat
+    its clips in the aggregates; the set is built in one partition
+    (``coalesce(1)``), which needs no shuffle."""
+    extra = {}
+    if misses:
+        hit = (dim.select("codec").coalesce(1).distinct()
+               .withColumn("_hit", F.lit(1)))
+        clips = clips.join(F.broadcast(hit), "codec", "left")
+        extra["codec_misses"] = F.count_if(F.col("_hit").isNull())
+    if bins:
+        extra.update(_bin_aggs())
+    return stats.partition_column_stats(clips, extra_aggs=extra)
+
+
+def distinct_plan(clips: DataFrame, col: str = "clip_id") -> DataFrame:
+    """Pass 2: per-partition count of distinct non-null ids, two-level."""
+    return (clips.groupBy("part", col).count()
+            .groupBy("part").agg(F.count(col).alias(f"{col}_distinct")))
+
+
+def _baseline_bins(rows: dict, baseline: Optional[DataFrame],
+                   baseline_parts) -> Optional[list]:
+    if baseline is None:
+        src = [rows[p] for p in baseline_parts if p in rows]
+    else:
+        src = (baseline.filter(F.col("part").isin(list(baseline_parts)))
+               .agg(*[c.alias(n) for n, c in _bin_aggs().items()])
+               .collect())
+    if not src:
+        return None
+    return [sum(r[c] for r in src) for c in BIN_COLS]
+
+
+def collect_suite(clips: DataFrame, dim: DataFrame,
+                  baseline: DataFrame = None, baseline_parts=None,
+                  checks=CHECKS) -> SuiteRun:
+    """Run ``checks`` over ``clips`` and finalize on the driver.
+
+    The drift baseline comes from ``baseline`` when given (one more,
+    bins-only aggregation), else from the ``baseline_parts`` rows of
+    ``clips`` itself, at no extra cost.  A partition with no rows has no
+    aggregate row and so no verdicts."""
+    baseline_parts = tuple(drift_dist.DEFAULT_BASELINE_PARTS
+                           if baseline_parts is None else baseline_parts)
+    need = {c.aggregates for c in checks}
+    agg = aggregate_plan(clips, dim, misses="misses" in need,
+                         bins="bins" in need)
+    stat_cols = [c for c in agg.columns
+                 if c != "codec_misses" and c not in BIN_COLS]
+    rows = {r["part"]: r.asDict() for r in agg.collect()}
+    if "distinct" in need:
+        for r in distinct_plan(clips).collect():
+            if r["part"] in rows:
+                rows[r["part"]]["clip_id_distinct"] = r["clip_id_distinct"]
+    base = (_baseline_bins(rows, baseline, baseline_parts)
+            if "bins" in need else None)
+    report = sorted(rows, key=lambda p: (p is None, p))
+    return SuiteRun(
+        stats={p: {c: rows[p][c] for c in stat_cols} for p in report},
+        verdicts=[Verdict(p, c.name, *c.finalize(rows[p], base))
+                  for p in report for c in checks])
+
+
+def verdict_frame(clips: DataFrame, verdicts: list) -> DataFrame:
+    """The verdict rows as a one-partition DataFrame (part, check_name,
+    passed, observed, expected), ``part`` typed as in ``clips``.  The rows
+    are literals expanded in the JVM: ``createDataFrame`` of local rows
+    would start a Python worker per task to re-serialize them, and write
+    one file per task."""
+    schema = StructType([
+        StructField("part", clips.schema["part"].dataType),
+        StructField("check_name", StringType()),
+        StructField("passed", BooleanType()),
+        StructField("observed", StringType()),
+        StructField("expected", StringType())])
+    rows = F.array(*[F.struct(*[F.lit(x) for x in v]) for v in verdicts])
+    return (clips.sparkSession.range(0, 1, 1, 1)
+            .select(F.inline(rows.cast(ArrayType(schema)))))
 
 
 def _union(dfs: list) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def make_context(clips: DataFrame, dim: DataFrame,
-                 baseline: DataFrame = None,
-                 baseline_parts=None, st: DataFrame = None) -> CheckContext:
-    return CheckContext(
-        clips=clips, dim=dim,
-        stats=st if st is not None else stats.partition_column_stats(clips),
-        baseline=baseline,
-        baseline_parts=(tuple(baseline_parts) if baseline_parts is not None
-                        else tuple(drift_dist.DEFAULT_BASELINE_PARTS)))
-
-
 def suite_verdicts(clips: DataFrame, dim: DataFrame,
                    baseline: DataFrame = None, baseline_parts=None,
                    st: DataFrame = None) -> DataFrame:
-    """All checks' per-partition verdict rows (one stats pass shared)."""
-    ctx = make_context(clips, dim, baseline, baseline_parts, st)
-    return _union([c.verdicts(ctx) for c in CHECKS])
+    """All checks' per-partition verdict rows, computed eagerly by
+    ``collect_suite``.  ``st`` is accepted for callers of the former lazy
+    suite and unused: pass 1 computes the same columns itself."""
+    run = collect_suite(clips, dim, baseline, baseline_parts)
+    return verdict_frame(clips, run.verdicts)
 
 
 def suite_violations(clips: DataFrame, dim: DataFrame) -> DataFrame:
     """All checks' violation rows (clip_id, check_name, observed,
     expected, part)."""
-    ctx = make_context(clips, dim)
+    ctx = CheckContext(clips, dim)
     return _union([c.violations(ctx) for c in CHECKS if c.violations])
+
+
+def failing_violations(clips: DataFrame, dim: DataFrame,
+                       verdicts: list) -> Optional[DataFrame]:
+    """The violation rows of each check, built only over the partitions
+    whose verdict for that check did not pass; None when every verdict
+    passed."""
+    failing: dict = {}
+    for v in verdicts:
+        if not v.passed:
+            failing.setdefault(v.check_name, []).append(v.part)
+    frames = [c.violations(CheckContext(
+                  clips.filter(F.col("part").isin(failing[c.name])), dim))
+              for c in CHECKS if c.violations and c.name in failing]
+    return _union(frames) if frames else None
 
 
 def streaming_suite_verdicts(batch: DataFrame, dim: DataFrame) -> DataFrame:
     """The micro-batch-safe subset (drift vs baseline and cross-batch
-    uniqueness are owned by the batch runner)."""
-    ctx = make_context(batch, dim)
-    return _union([c.verdicts(ctx) for c in CHECKS if c.streaming_safe])
+    uniqueness are owned by the batch runner): pass 1 alone, without the
+    drift bins."""
+    run = collect_suite(batch, dim,
+                        checks=[c for c in CHECKS if c.streaming_safe])
+    return verdict_frame(batch, run.verdicts)

@@ -581,24 +581,25 @@ def main() -> int:
         print(f"error: no clips table at {clips_path}", file=sys.stderr)
         return 2
     full = spark.read.parquet(clips_path)
-    clips = full
     dim = spark.read.parquet(dim_path)
+    # one fused suite run; with --part the drift baseline is read from the
+    # full table, so drift scores match the full-table run
+    clips, baseline = full, None
     if args.part is not None:
-        clips = full.filter(F.col("part") == args.part)
-        if clips.isEmpty():
-            print(f"error: partition {args.part} not found", file=sys.stderr)
-            return 2
+        clips, baseline = full.filter(F.col("part") == args.part), full
+    run = suite.collect_suite(clips, dim, baseline=baseline)
+    if args.part is not None and args.part not in run.stats:
+        print(f"error: partition {args.part} not found", file=sys.stderr)
+        return 2
 
-    verdicts = (suite.suite_verdicts(clips, dim, baseline=full)
-                .orderBy("part", "check_name"))
-
-    rows = verdicts.collect()
-    n_fail = sum(1 for r in rows if not r["passed"])
+    rows = sorted(run.verdicts, key=lambda r: (r.part, r.check_name))
+    n_fail = sum(1 for r in rows if not r.passed)
     for r in rows:
-        mark = "PASS" if r["passed"] else "FAIL"
-        print(f"part={r['part']:>3} {r['check_name']:<24} {mark}  "
-              f"observed={r['observed']}  expected={r['expected']}")
-    n_rows = clips.count()
+        mark = "PASS" if r.passed else "FAIL"
+        print(f"part={r.part:>3} {r.check_name:<24} {mark}  "
+              f"observed={r.observed}  expected={r.expected}")
+    # the row count comes from the suite's own aggregate: no second scan
+    n_rows = sum(s["row_count"] for s in run.stats.values())
     dt = time.time() - t0
     print(f"\n{len(rows)} checks, {n_fail} failing; {n_rows} clips validated "
           f"in {dt:.1f}s ({n_rows / dt:.0f} clips/sec)")

@@ -52,8 +52,14 @@ def main() -> int:
             .filter("text is not null"))
 
     cases = [
-        ("suite_verdicts (batch check suite)",
-         SU.suite_verdicts(clips, dim),
+        # the batch check suite is two aggregation passes finalized on
+        # the driver: audit each pass's plan
+        ("suite pass 1 (fused per-partition aggregation)",
+         SU.aggregate_plan(clips, dim),
+         {"no_bytes_scan": True, "no_cartesian": True, "broadcast": True,
+          "single_exchange": True}),
+        ("suite pass 2 (two-level distinct clip_id count)",
+         SU.distinct_plan(clips),
          {"no_bytes_scan": True, "no_cartesian": True}),
         ("partition_column_stats",
          stats.partition_column_stats(clips),

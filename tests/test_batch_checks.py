@@ -270,3 +270,182 @@ def test_emd_against_numpy_oracle(spark, clips, duck):
     assert clean.max() < 100
     assert drifted.min() > 150
     assert 150 < drifted.mean() < 500
+
+
+# -- the fused suite against the per-operator lazy suite --------------------
+
+def _lazy_suite_verdicts(clips, dim, baseline=None,
+                         baseline_parts=drift_dist.DEFAULT_BASELINE_PARTS):
+    """The suite as it was built before the fused passes: one lazy plan
+    per check over a shared stats frame, unioned — the oracle for
+    ``suite.suite_verdicts`` (same operators, same thresholds)."""
+    st = stats.partition_column_stats(clips)
+    return (stats.null_rate_verdicts(st)
+            .unionByName(stats.range_verdicts(st, "sr_hz", 8000, 48000))
+            .unionByName(uniqueness.uniqueness_verdicts(clips))
+            .unionByName(referential.referential_verdicts(clips, dim))
+            .unionByName(drift_dist.drift_verdicts(
+                clips, baseline=baseline, baseline_parts=baseline_parts)))
+
+
+def _verdict_rows(df):
+    return sorted((tuple(r) for r in df.select(
+        "part", "check_name", "passed", "observed", "expected").collect()),
+        key=lambda t: (t[0], t[1]))
+
+
+def _edge_clips(spark, clips):
+    """The fixture plus three edge partitions: 20 has an all-null dur_ms,
+    21 has null codecs, 22 has two null clip_ids."""
+    base = clips.drop("bytes")
+    rows = []
+    for i in range(50):
+        rows.append((10_000 + i, f"e20-{i}", 16000, None, "pcm_s16le",
+                     "t", 20))
+        rows.append((20_000 + i, f"e21-{i}", 16000, 300 + i,
+                     None if i % 10 == 0 else "pcm_s16le", "t", 21))
+        rows.append((30_000 + i, None if i < 2 else f"e22-{i}", 16000,
+                     400 + 7 * i, "pcm_s16le", None if i == 3 else "t", 22))
+    edge = spark.createDataFrame(rows, base.schema)
+    return base.unionByName(edge)
+
+
+def test_fused_suite_equals_lazy_suite_on_fixture(spark, clips,
+                                                  allowed_codecs):
+    """Rows identical to the lazy union, Spark's number formatting in
+    ``observed`` included; the streaming subset likewise."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    got = _verdict_rows(suite.suite_verdicts(clips, allowed_codecs))
+    assert got == _verdict_rows(_lazy_suite_verdicts(clips, allowed_codecs))
+    names = {c.name for c in suite.CHECKS if c.streaming_safe}
+    want = [r for r in got if r[1] in names]
+    assert _verdict_rows(suite.streaming_suite_verdicts(
+        clips, allowed_codecs)) == want
+
+
+def test_fused_suite_equals_lazy_suite_on_edge_inputs(spark, clips,
+                                                      allowed_codecs):
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    dim = allowed_codecs
+    edge = _edge_clips(spark, clips)
+    got = _verdict_rows(suite.suite_verdicts(edge, dim))
+    assert got == _verdict_rows(_lazy_suite_verdicts(edge, dim))
+    by = {(r[0], r[1]): r for r in got}
+    assert by[(21, "referential(codec)")][2] is False      # null codec
+    assert by[(22, "unique(clip_id)")][2] is False         # two null ids
+    assert by[(20, "dist_drift(dur_ms)")][3].startswith("psi=")
+
+    # baseline partitions absent: drift fails closed with a null observed
+    late = edge.filter("part >= 8")
+    got = _verdict_rows(suite.suite_verdicts(late, dim))
+    assert got == _verdict_rows(_lazy_suite_verdicts(late, dim))
+    drift = [r for r in got if r[1] == "dist_drift(dur_ms)"]
+    assert drift and all(r[2] is False and r[3] is None for r in drift)
+
+    # an empty partition has no aggregate row, hence no verdict rows
+    empty = edge.filter("part = 99")
+    assert _verdict_rows(suite.suite_verdicts(empty, dim)) == []
+    assert _verdict_rows(_lazy_suite_verdicts(empty, dim)) == []
+
+    # a separate baseline frame (the runner's shape once the baseline
+    # partitions are done)
+    got = _verdict_rows(suite.suite_verdicts(late, dim, baseline=edge))
+    assert got == _verdict_rows(_lazy_suite_verdicts(late, dim,
+                                                     baseline=edge))
+
+
+def test_fused_suite_duplicated_dimension_rows(spark, clips,
+                                               allowed_codecs):
+    """Every codec listed twice in the dimension changes no verdict and no
+    stat: pass 1 joins the dimension's distinct codec set, so no clip is
+    counted twice."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    dup = allowed_codecs.unionByName(allowed_codecs)
+    edge = _edge_clips(spark, clips)
+    got = _verdict_rows(suite.suite_verdicts(edge, dup))
+    assert got == _verdict_rows(_lazy_suite_verdicts(edge, dup))
+    assert got == _verdict_rows(suite.suite_verdicts(edge, allowed_codecs))
+    want = {r["part"]: r.asDict()
+            for r in stats.partition_column_stats(edge).collect()}
+    assert suite.collect_suite(edge, dup).stats == want
+
+
+def test_fused_suite_every_violation_implies_failing_verdict(
+        spark, clips, allowed_codecs):
+    """Every violation row's check failed for its partition, null clip_ids
+    and null codecs included, and the violations restricted to failing
+    partitions equal the unrestricted ones."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    edge = _edge_clips(spark, clips)
+    run = suite.collect_suite(edge, allowed_codecs)
+    failing = {(v.part, v.check_name) for v in run.verdicts if not v.passed}
+    full = suite.suite_violations(edge, allowed_codecs)
+    keyed = {(r["part"], r["check_name"]) for r in
+             full.select("part", "check_name").distinct().collect()}
+    assert {(21, "referential(codec)"), (22, "unique(clip_id)")} <= keyed
+    assert keyed <= failing
+
+    def rows(df):
+        return sorted(tuple("" if x is None else str(x) for x in r)
+                      for r in df.collect())
+    restricted = suite.failing_violations(edge, allowed_codecs, run.verdicts)
+    assert rows(restricted) == rows(full)
+
+
+def test_fused_suite_number_formatting_matches_spark(spark):
+    """``round(double, 6)`` and ``CAST(double AS STRING)`` reproduced on the
+    driver: plain and scientific notation, HALF_UP ties, zero."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    rnd = random.Random(7)
+    vals = [0.0, -0.0, 5e-4, 1e-3, 9.99e-4, 1e-7, 0.0078125, 2.5e-7,
+            0.0050005, 123.456789, 9999999.0, 1e7, 12345678.9, 1 / 3]
+    vals += [rnd.uniform(0, 2) for _ in range(3000)]
+    vals += [10 ** rnd.uniform(-8, 8) for _ in range(3000)]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
+                               "i long, v double")
+    for r in df.select("i", F.round("v", 6).alias("r"),
+                       F.round("v", 6).cast("string").alias("s")).collect():
+        assert suite._jround(vals[r.i]) == r.r, vals[r.i]
+        assert suite._jstr(r.r) == r.s, r.r
+
+
+def test_fused_suite_plan_shape(spark, clips, allowed_codecs):
+    """Pass 1 is one aggregation with no Expand and no distinct aggregate
+    (a count_distinct there would carry every percentile_approx buffer at
+    (part, clip_id) grain), and the verdict phase reads the clips parquet
+    at most twice: once per pass (the third scan is the 3-row codec
+    dimension under the broadcast)."""
+    import re
+
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    p1 = plan(suite.aggregate_plan(clips, allowed_codecs))
+    assert "Expand" not in p1
+    assert not re.search(r"\(distinct ", p1)
+    assert "BroadcastHashJoin" in p1 or "BroadcastExchange" in p1
+    p2 = plan(suite.distinct_plan(clips))
+    scans = re.findall(r"(?:FileScan|Scan) parquet [^\n]*", p1 + p2)
+    clip_scans = [s for s in scans if "allowed_codecs" not in s]
+    assert len(clip_scans) <= 2, scans
+    assert len(scans) - len(clip_scans) <= 1, scans
+    assert "bytes" not in " ".join(re.findall(r"ReadSchema: ([^\n]*)", p1))
+
+
+def test_check_registry_has_no_lazy_verdict_builders(spark):
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    for c in suite.CHECKS:
+        assert not hasattr(c, "verdicts")
+        assert callable(c.finalize)

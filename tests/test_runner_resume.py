@@ -499,3 +499,92 @@ def test_run_reads_manifest_exactly_once(spark, io, monkeypatch):
     r.run(spark, limit_parts=3)           # a RESUME run (state replay live)
     monkeypatch.undo()
     assert calls.count("once") == 1
+
+
+def _rows(df):
+    return sorted(tuple("" if x is None else str(x) for x in r)
+                  for r in df.collect())
+
+
+def test_runner_violations_equal_unrestricted_suite(spark, io):
+    """The runner lists violations only for partitions whose check failed;
+    on the fixture that is exactly the unrestricted suite's output."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    r = ValidationRunner(io, scope="restricted")
+    r.run(spark)
+    got = r.read_violations(spark).drop("run_scope")
+    clips = io.read_table(spark, "clips")
+    want = suite.suite_violations(clips, io.read_table(spark,
+                                                       "allowed_codecs"))
+    cols = ["clip_id", "check_name", "observed", "expected", "part"]
+    assert _rows(got.select(*cols)) == _rows(want.select(*cols))
+
+
+def test_manifest_metrics_equal_partition_stats(spark, io):
+    """metrics_json of every committed row is the partition's
+    ``partition_column_stats`` row, key order included."""
+    import json
+
+    from drift_detection_pibic___framework_spark.operators import stats
+
+    r = ValidationRunner(io, scope="metrics")
+    r.run(spark)
+    m = io.read_manifest("metrics")
+    st = stats.partition_column_stats(io.read_table(spark, "clips"))
+    rows = {x["part"]: x.asDict() for x in st.collect()}
+    assert set(m) == set(rows)
+    for p, row in rows.items():
+        assert m[p]["metrics_json"] == json.dumps(row, default=str), p
+
+
+def test_all_passing_table_writes_no_violations_and_resumes(spark, io):
+    """A table whose every partition passes (parts 0 and 1 only) commits
+    both, writes no violation rows, and resumes like any other."""
+    import os
+
+    d = os.path.join(io.root, "clips")
+    for f in os.listdir(d):
+        if f not in ("part-0000.parquet", "part-0001.parquet"):
+            os.unlink(os.path.join(d, f))
+    r = ValidationRunner(io, scope="clean")
+    assert r.run(spark, limit_parts=1)["validated"] == [0]
+    assert io.pending_partitions("clips", "clean") == [1]
+    assert r.run(spark)["validated"] == [1]
+    assert r.run(spark)["skipped"]
+    assert r.verdict_matrix() == {0: "pass", 1: "pass"}
+    m = io.read_manifest("clean")
+    assert all(all(v["checks"].values()) for v in m.values())
+    out = os.path.join(io.root, r.violations_table)
+    assert not any(f.endswith(".parquet")
+                   for _, _, fs in os.walk(out) for f in fs)
+
+
+def test_resume_run_aggregates_only_pending_partitions(spark, io,
+                                                       monkeypatch):
+    """A resume run with the baseline window already done runs the suite
+    over the pending partitions only; the drift baseline comes from a
+    separate bins-only aggregation over the full table.  A backfill sums
+    the baseline from its own pass-1 rows."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    calls = []
+    real = suite.collect_suite
+
+    def spy(clips, dim, baseline=None, **kw):
+        calls.append((clips, baseline))
+        return real(clips, dim, baseline=baseline, **kw)
+
+    monkeypatch.setattr(suite, "collect_suite", spy)
+    r = ValidationRunner(io, scope="incr")
+    r.run(spark, limit_parts=6)
+    r.run(spark)
+    monkeypatch.undo()
+
+    def parts(df):
+        return sorted(x["part"] for x in df.select("part").distinct()
+                      .collect())
+    (first, base1), (second, base2) = calls
+    assert parts(first) == list(range(6)) and base1 is None
+    assert parts(second) == list(range(6, 16))
+    assert parts(base2) == list(range(16))
