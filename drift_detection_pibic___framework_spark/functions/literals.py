@@ -1,0 +1,55 @@
+"""Driver-side rows in Spark's own terms.
+
+Operators that finalize O(parts x ...) collected aggregates on the driver
+(the fused check suite, the binned drift scores) format their numbers
+with ``jround`` and ``jstr``, which reproduce Spark's ``round(double, n)``
+and ``CAST(double AS STRING)``, so their rows equal the ones a Spark
+expression would build.  ``literal_frame`` hands such rows back as a
+DataFrame without a Spark job.
+"""
+
+from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, StructType
+
+
+def jround(x, n: int = 6):
+    """Spark's ``round(double, n)``: HALF_UP on the double's shortest
+    decimal form."""
+    if x is None or math.isnan(x) or math.isinf(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n),
+                                           ROUND_HALF_UP))
+
+
+def jstr(x):
+    """Spark's ``CAST(double AS STRING)`` (Java ``Double.toString``): plain
+    decimal for 1e-3 <= |x| < 1e7 and zero, ``d.dddE[-]n`` otherwise."""
+    if x is None:
+        return None
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    if x == 0 or 1e-3 <= abs(x) < 1e7:
+        return repr(x)
+    sign, digits, exp = Decimal(repr(x)).normalize().as_tuple()
+    ds = "".join(map(str, digits))
+    return f"{'-' if sign else ''}{ds[0]}.{ds[1:] or '0'}E{exp + len(ds) - 1}"
+
+
+def literal_frame(spark: SparkSession, rows: list,
+                  schema: StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as a one-partition DataFrame
+    of ``schema``, nullability included (with no rows, every column is
+    nullable).  The rows are literals expanded in the JVM by ``inline``
+    over a one-row ``range``: ``createDataFrame`` of local rows is
+    RDD-backed, so collecting it runs a job, starts a Python worker per
+    task and writes one file per task."""
+    arr = F.array(*[F.struct(*[F.lit(x) for x in r]) for r in rows])
+    return (spark.range(0, 1, 1, 1)
+            .select(F.inline(arr.cast(ArrayType(schema, not rows)))))

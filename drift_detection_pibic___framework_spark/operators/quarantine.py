@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .referential import mark_hits
+
 REASON_NULL_TRANSCRIPT = "null_transcript"
 REASON_SR_RANGE = "sr_out_of_range"
 REASON_UNKNOWN_CODEC = "unknown_codec"
@@ -38,10 +40,7 @@ def label_rows(clips: DataFrame, dim: DataFrame,
     order is fixed (null, range, referential, duplicate) so the array is
     deterministic and engine-portable."""
     w = Window.partitionBy("part", "clip_id").orderBy("rid")
-    return (clips
-            .join(F.broadcast(dim.select("codec")
-                              .withColumn("_codec_ok", F.lit(1))),
-                  "codec", "left")
+    return (mark_hits(clips, dim)
             .withColumn("_rk", F.row_number().over(w))
             .withColumn("reasons", F.array_compact(F.array(
                 F.when(F.col("transcript").isNull(),
@@ -49,10 +48,10 @@ def label_rows(clips: DataFrame, dim: DataFrame,
                 F.when(~F.col("sr_hz").between(sr_lo, sr_hi)
                        | F.col("sr_hz").isNull(),
                        F.lit(REASON_SR_RANGE)),
-                F.when(F.col("_codec_ok").isNull(),
+                F.when(F.col("_hit").isNull(),
                        F.lit(REASON_UNKNOWN_CODEC)),
                 F.when(F.col("_rk") > 1, F.lit(REASON_DUP_CLIP_ID)))))
-            .drop("_codec_ok", "_rk"))
+            .drop("_hit", "_rk"))
 
 
 def quarantine(clips: DataFrame, dim: DataFrame,

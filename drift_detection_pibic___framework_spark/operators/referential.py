@@ -13,6 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+def mark_hits(clips: DataFrame, dim: DataFrame,
+              col: str = "codec") -> DataFrame:
+    """``clips`` broadcast-left-joined to the dimension's DISTINCT ``col``
+    set, with ``_hit`` = 1 on a match and null on a miss.  The set is
+    de-duplicated first, so a key listed twice in the dimension cannot
+    repeat its rows; it is built in one partition (``coalesce(1)``),
+    which needs no shuffle."""
+    hit = (dim.select(col).coalesce(1).distinct()
+           .withColumn("_hit", F.lit(1)))
+    return clips.join(F.broadcast(hit), col, "left")
+
+
 def referential_violations(clips: DataFrame, dim: DataFrame,
                            col: str = "codec") -> DataFrame:
     """Violation rows: clips whose codec has no match in the dimension.
@@ -33,10 +45,7 @@ def referential_verdicts(clips: DataFrame, dim: DataFrame,
     Computed WITHOUT a second scan of the anti-join output: a broadcast LEFT
     join marks misses, then one agg per partition counts them — single
     shuffle of one row per (split × part)."""
-    marked = clips.join(
-        F.broadcast(dim.select(F.col(col), F.lit(1).alias("_hit"))),
-        on=col, how="left")
-    per = marked.groupBy("part").agg(
+    per = mark_hits(clips, dim, col).groupBy("part").agg(
         F.sum(F.when(F.col("_hit").isNull(), 1).otherwise(0)).alias("misses"),
         F.count(F.lit(1)).alias("row_count"))
     return per.select(

@@ -26,9 +26,10 @@ Two gates, both sidecar-only:
 - ``uniqueness_drift_report`` — HLL inclusion-exclusion estimating how
   much of the commit was ALREADY ingested by history (cross-commit
   re-ingestion screen) plus the commit's internal duplicate rate.
-The scan-based distribution checks (PSI/binned-KS/JSD on explicit bin
-grids) live in operators/drift_dist.py; this module is the cheap always-on
-gate that runs at every commit.
+The scan-based distribution checks (PSI/binned-KS/JSD/chi-squared/W1
+from one fixed-bin count aggregation, scored on the driver) live in
+operators/drift_dist.py; this module is the cheap always-on gate that runs
+at every commit.
 """
 
 from __future__ import annotations

@@ -103,10 +103,12 @@ def null_violations(clips: DataFrame, col: str = "transcript",
     the threshold (per-partition verdict granularity, north_rule).
 
     The failing-partition set is computed as an aggregation and joined back
-    broadcast (tiny: <= one row per partition)."""
+    broadcast (tiny: <= one row per partition).  It compares the rate
+    rounded to 6 places, the value ``null_rate_verdicts`` compares, so a
+    partition lists violations exactly when its verdict fails."""
     failing = (clips.groupBy("part")
-               .agg(F.avg(F.when(F.col(col).isNull(), 1.0).otherwise(0.0))
-                    .alias("nr"))
+               .agg(F.round(F.avg(F.when(F.col(col).isNull(), 1.0)
+                                  .otherwise(0.0)), 6).alias("nr"))
                .filter(F.col("nr") > max_null_rate)
                .select("part"))
     return (clips.join(F.broadcast(failing), "part")

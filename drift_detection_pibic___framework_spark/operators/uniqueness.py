@@ -33,8 +33,7 @@ def uniqueness_sketches(clips: DataFrame, col: str = "clip_id") -> DataFrame:
     )
 
 
-def uniqueness_verdicts(clips: DataFrame, col: str = "clip_id",
-                        rel_tol: float = 0.02) -> DataFrame:
+def uniqueness_verdicts(clips: DataFrame, col: str = "clip_id") -> DataFrame:
     """Per-partition pass/fail: exact distinct count vs exact row count.
 
     The verdict needs the EXACT distinct count: the golden matrix injects
@@ -43,8 +42,7 @@ def uniqueness_verdicts(clips: DataFrame, col: str = "clip_id",
     error would pass them.  The sketch path (``uniqueness_sketches``,
     ``global_distinct_estimate``) is the scale metric, not the verdict.
     Null ids are not counted as distinct values, so a partition holding
-    any null id fails.  ``rel_tol`` is accepted for existing callers and
-    unused: the exact comparison needs no tolerance."""
+    any null id fails."""
     per = clips.groupBy("part").agg(
         F.count(F.lit(1)).alias("row_count"),
         F.count_distinct(F.col(col)).alias("exact_distinct"),

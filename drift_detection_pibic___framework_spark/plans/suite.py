@@ -17,7 +17,7 @@ O(parts x (checks + bins)) collected numbers into verdict rows.
 - Pass 1 is ONE ``groupBy(part)`` aggregation over the clips,
   broadcast-left-joined to the codec dimension. It carries the
   ``partition_column_stats`` columns, the codec-miss count and the 40
-  drift bins as ``count_if`` columns.
+  drift bins (``drift_dist.bin_aggs``).
 - Pass 2 is ``groupBy(part, clip_id).count()`` -> ``groupBy(part)``: the
   exact distinct id count.  It stays a pass of its own: a
   ``count_distinct`` in pass 1 makes Spark's distinct rewrite (Expand)
@@ -25,34 +25,34 @@ O(parts x (checks + bins)) collected numbers into verdict rows.
 
 A finalizer maps one partition's aggregate row (plus the baseline
 window's summed bins) to ``(passed, observed, expected)`` in plain
-Python.  ``_jround`` and ``_jstr`` reproduce Spark's ``round(double, 6)``
-and ``CAST(double AS STRING)``, so the rows equal the ones the per-check
-operators build in Spark (tests/test_batch_checks.py keeps that lazy
-union as the oracle).  Evaluating the operators over the collected rows
-instead would cost a Spark job per run: ``createDataFrame`` of local rows
-is RDD-backed, not a local relation.  Violation builders stay lazy plans;
-the runner calls each one only for the partitions whose check failed.
+Python; the drift check scores its bins with ``drift_dist.score``, the
+one PSI/KS implementation.  ``functions/literals.py`` reproduces Spark's
+``round(double, 6)`` and ``CAST(double AS STRING)``, so the rows equal the
+ones the per-check operators build in Spark (tests/test_batch_checks.py
+keeps that lazy union as the oracle).  Evaluating the operators over the
+collected rows instead would cost a Spark job per run: ``createDataFrame``
+of local rows is RDD-backed, not a local relation.  Violation builders
+stay lazy plans; the runner calls each one only for the partitions whose
+check failed.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
-from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (BooleanType, StringType, StructField,
+                               StructType)
 
+from ..functions.literals import jstr, literal_frame
 from ..operators import drift_dist, referential, stats, uniqueness
 
 NULL_RATE_MAX = 0.005
 SR_RANGE = (8000, 48000)
 PSI_MAX = 0.2
 DRIFT_COL, BIN_WIDTH, N_BINS = "dur_ms", 100.0, 40
-BIN_COLS = tuple(f"_bin{i}" for i in range(N_BINS))
 
 
 class Verdict(NamedTuple):
@@ -89,60 +89,15 @@ class SuiteRun:
     verdicts: list   # Verdict per (reported part, check)
 
 
-# -- Spark's double semantics on the driver ---------------------------------
-
-def _jround(x, n: int = 6):
-    """Spark's ``round(double, n)``: HALF_UP on the double's shortest
-    decimal form."""
-    if x is None or math.isnan(x) or math.isinf(x):
-        return x
-    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n),
-                                           ROUND_HALF_UP))
-
-
-def _jstr(x):
-    """Spark's ``CAST(double AS STRING)`` (Java ``Double.toString``): plain
-    decimal for 1e-3 <= |x| < 1e7 and zero, ``d.dddE[-]n`` otherwise."""
-    if x is None:
-        return None
-    if math.isnan(x):
-        return "NaN"
-    if math.isinf(x):
-        return "Infinity" if x > 0 else "-Infinity"
-    if x == 0 or 1e-3 <= abs(x) < 1e7:
-        return repr(x)
-    sign, digits, exp = Decimal(repr(x)).normalize().as_tuple()
-    ds = "".join(map(str, digits))
-    return f"{'-' if sign else ''}{ds[0]}.{ds[1:] or '0'}E{exp + len(ds) - 1}"
-
-
 def _sstr(v):
-    return _jstr(v) if isinstance(v, float) else str(v)
-
-
-def psi_ks(counts, tot: int, base) -> tuple:
-    """``drift_dist.drift_scores``' PSI and binned KS of one partition's
-    bin counts against the baseline window's, with the same double
-    operations; (None, None) when the baseline window is empty."""
-    btot = sum(base) if base else 0
-    if not btot:
-        return None, None
-    psi = ks = cp = cb = 0.0
-    for c, bc in zip(counts, base):
-        p, b = c / tot, bc / btot
-        pe, be = p + drift_dist.EPS, b + drift_dist.EPS
-        psi += (pe - be) * math.log(pe / be)
-        cp += p
-        cb += b
-        ks = max(ks, abs(cp - cb))
-    return _jround(psi), _jround(ks)
+    return jstr(v) if isinstance(v, float) else str(v)
 
 
 # -- finalizers: one per check ----------------------------------------------
 
 def _null_rate(row, _base):
     rate = row["transcript_null_rate"]
-    return (None if rate is None else rate <= NULL_RATE_MAX, _jstr(rate),
+    return (None if rate is None else rate <= NULL_RATE_MAX, jstr(rate),
             f"<= {NULL_RATE_MAX}")
 
 
@@ -165,10 +120,8 @@ def _referential(row, _base):
 
 
 def _drift(row, base):
-    psi, ks = psi_ks([row[c] for c in BIN_COLS], row["row_count"], base)
-    observed = (None if psi is None or ks is None
-                else f"psi={_jstr(psi)} ks={_jstr(ks)}")
-    return psi is not None and psi <= PSI_MAX, observed, f"psi <= {PSI_MAX}"
+    s = drift_dist.score(row["bins"], base)
+    return drift_dist.drift_verdict(s["psi"], s["ks"], PSI_MAX)
 
 
 CHECKS: tuple = (
@@ -192,11 +145,6 @@ CHECKS: tuple = (
 
 # -- the two passes ---------------------------------------------------------
 
-def _bin_aggs() -> dict:
-    b = drift_dist.bin_index(DRIFT_COL, BIN_WIDTH, N_BINS)
-    return {c: F.count_if(b == i) for i, c in enumerate(BIN_COLS)}
-
-
 def aggregate_plan(clips: DataFrame, dim: DataFrame, misses: bool = True,
                    bins: bool = True) -> DataFrame:
     """Pass 1: ``partition_column_stats`` plus the codec-miss count and
@@ -206,12 +154,10 @@ def aggregate_plan(clips: DataFrame, dim: DataFrame, misses: bool = True,
     (``coalesce(1)``), which needs no shuffle."""
     extra = {}
     if misses:
-        hit = (dim.select("codec").coalesce(1).distinct()
-               .withColumn("_hit", F.lit(1)))
-        clips = clips.join(F.broadcast(hit), "codec", "left")
+        clips = referential.mark_hits(clips, dim)
         extra["codec_misses"] = F.count_if(F.col("_hit").isNull())
     if bins:
-        extra.update(_bin_aggs())
+        extra["bins"] = drift_dist.bin_aggs(DRIFT_COL, BIN_WIDTH, N_BINS)
     return stats.partition_column_stats(clips, extra_aggs=extra)
 
 
@@ -219,19 +165,6 @@ def distinct_plan(clips: DataFrame, col: str = "clip_id") -> DataFrame:
     """Pass 2: per-partition count of distinct non-null ids, two-level."""
     return (clips.groupBy("part", col).count()
             .groupBy("part").agg(F.count(col).alias(f"{col}_distinct")))
-
-
-def _baseline_bins(rows: dict, baseline: Optional[DataFrame],
-                   baseline_parts) -> Optional[list]:
-    if baseline is None:
-        src = [rows[p] for p in baseline_parts if p in rows]
-    else:
-        src = (baseline.filter(F.col("part").isin(list(baseline_parts)))
-               .agg(*[c.alias(n) for n, c in _bin_aggs().items()])
-               .collect())
-    if not src:
-        return None
-    return [sum(r[c] for r in src) for c in BIN_COLS]
 
 
 def collect_suite(clips: DataFrame, dim: DataFrame,
@@ -248,15 +181,18 @@ def collect_suite(clips: DataFrame, dim: DataFrame,
     need = {c.aggregates for c in checks}
     agg = aggregate_plan(clips, dim, misses="misses" in need,
                          bins="bins" in need)
-    stat_cols = [c for c in agg.columns
-                 if c != "codec_misses" and c not in BIN_COLS]
+    stat_cols = [c for c in agg.columns if c not in ("codec_misses", "bins")]
     rows = {r["part"]: r.asDict() for r in agg.collect()}
     if "distinct" in need:
         for r in distinct_plan(clips).collect():
             if r["part"] in rows:
                 rows[r["part"]]["clip_id_distinct"] = r["clip_id_distinct"]
-    base = (_baseline_bins(rows, baseline, baseline_parts)
-            if "bins" in need else None)
+    base = None
+    if "bins" in need:
+        counts = ({p: r["bins"] for p, r in rows.items()} if baseline is None
+                  else drift_dist.bin_counts(baseline, DRIFT_COL, BIN_WIDTH,
+                                             N_BINS, baseline_parts))
+        base = drift_dist.baseline_counts(counts, baseline_parts)
     report = sorted(rows, key=lambda p: (p is None, p))
     return SuiteRun(
         stats={p: {c: rows[p][c] for c in stat_cols} for p in report},
@@ -265,20 +201,16 @@ def collect_suite(clips: DataFrame, dim: DataFrame,
 
 
 def verdict_frame(clips: DataFrame, verdicts: list) -> DataFrame:
-    """The verdict rows as a one-partition DataFrame (part, check_name,
-    passed, observed, expected), ``part`` typed as in ``clips``.  The rows
-    are literals expanded in the JVM: ``createDataFrame`` of local rows
-    would start a Python worker per task to re-serialize them, and write
-    one file per task."""
+    """The verdict rows as a one-partition DataFrame of literals (part,
+    check_name, passed, observed, expected), ``part`` typed as in
+    ``clips``."""
     schema = StructType([
         StructField("part", clips.schema["part"].dataType),
         StructField("check_name", StringType()),
         StructField("passed", BooleanType()),
         StructField("observed", StringType()),
         StructField("expected", StringType())])
-    rows = F.array(*[F.struct(*[F.lit(x) for x in v]) for v in verdicts])
-    return (clips.sparkSession.range(0, 1, 1, 1)
-            .select(F.inline(rows.cast(ArrayType(schema)))))
+    return literal_frame(clips.sparkSession, verdicts, schema)
 
 
 def _union(dfs: list) -> DataFrame:

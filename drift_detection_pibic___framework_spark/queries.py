@@ -248,7 +248,7 @@ def clips_jsd_chi2_drift(spark, sf_dir):
     """Jensen-Shannon + chi-squared drift vs baseline p0-p3 — the
     symmetric/bounded and significance-bearing companions to PSI/KS
     (operators/drift_dist.py divergence_scores; same O(parts x bins)
-    broadcast-grid plan as clips_psi_drift)."""
+    bin-count aggregation as clips_psi_drift)."""
     from .operators import drift_dist
     c = clips_df(spark, sf_dir)
     return drift_dist.divergence_scores(c, "dur_ms", round_to=3)
@@ -4200,8 +4200,8 @@ def clips_ks_pvalue(spark, sf_dir):
     (SURVEY §7.2 step 4's "ECDF-based two-sample KS with asymptotic
     p-value").  Baseline parts 0-3: drifted partitions (8+) collapse to
     p ~ 0 while in-baseline partitions stay insignificant.  The 20-term
-    alternating series runs as a JVM-side F.aggregate expression — no
-    Python anywhere."""
+    alternating series runs on the driver over the collected bin
+    counts."""
     from .operators import drift_dist
     c = clips_df(spark, sf_dir)
     return drift_dist.drift_scores_with_p(c, "dur_ms")

@@ -20,7 +20,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
 
@@ -31,7 +32,9 @@ def formatted(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    # file locations relative to the checkout, so the report is the same
+    # wherever it is generated
+    return buf.getvalue().replace(ROOT + os.sep, "")
 
 
 def main() -> int:
@@ -380,22 +383,23 @@ def main() -> int:
                             "dur_ms", "part"),
         {"no_bytes_scan": True, "no_cartesian": True,
          "single_exchange": True}))
-    # KS + asymptotic p: series runs as a JVM aggregate expression over
-    # the same broadcast bin grid as drift_scores
+    # every binned drift score (PSI/KS/JSD/chi2/W1/KS p-value) is
+    # finalized on the driver from ONE groupBy(part) of count_if bins:
+    # bytes never touched, one exchange; the baseline window of a separate
+    # frame is filtered before the same aggregation
     from drift_detection_pibic___framework_spark.operators import (
         drift_dist as DDop)
     cases.append((
-        "drift_scores_with_p (bin grid + JVM-side Kolmogorov series)",
-        DDop.drift_scores_with_p(clips, "dur_ms"),
-        {"no_bytes_scan": True, "no_cartesian_data": True,
-         "broadcast": True}))
-    # Wasserstein-1 rides the SAME proportions grid as PSI/KS: O(parts x
-    # bins) shuffle, bin grid broadcast, bytes never touched
+        "drift bin counts (40 count_if bins, one groupBy(part))",
+        DDop.bin_count_plan(clips, "dur_ms"),
+        {"no_bytes_scan": True, "no_cartesian": True,
+         "single_exchange": True}))
     cases.append((
-        "emd_scores (W1 from the shared bin grid, bytes pruned)",
-        DDop.emd_scores(clips, "dur_ms"),
-        {"no_bytes_scan": True, "no_cartesian_data": True,
-         "broadcast": True}))
+        "drift baseline bin counts (baseline parts filtered first)",
+        DDop.bin_count_plan(clips, "dur_ms",
+                            parts=DDop.DEFAULT_BASELINE_PARTS),
+        {"no_bytes_scan": True, "no_cartesian": True,
+         "single_exchange": True}))
     # dropout screen: payload kernel — bytes IS the work, but the scan
     # must stop at the kernel's input contract (transcript/sr_hz/dur_ms
     # riding along would be wasted I/O at 100 TB)

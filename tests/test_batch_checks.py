@@ -1,10 +1,30 @@
 """Batch checks vs the DuckDB oracle (SURVEY §5 'stats oracle via duckdb')
 plus golden verdict-matrix assertions (FIXTURES.md §5)."""
 
+import uuid
+
 import numpy as np
 
+import drift_oracle
 from drift_detection_pibic___framework_spark.operators import (
     drift_dist, referential, stats, uniqueness)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _run_counting_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_partition_stats_match_duckdb(spark, clips, duck):
@@ -90,6 +110,22 @@ def test_stats_scan_prunes_bytes_column(spark, clips):
     import re
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "bytes" not in m.group(1)
+
+
+def test_null_violations_follow_the_rounded_rate(spark):
+    """10,002 null transcripts in 2,000,200 rows is a rate of 0.00500049995:
+    rounded to 6 places it is the 0.005 threshold itself, so the verdict
+    passes and no violation row is listed."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(2_000_200).select(
+        F.lit(0).alias("part"), F.col("id").cast("string").alias("clip_id"),
+        F.when(F.col("id") >= 10_002, F.lit("t")).alias("transcript"))
+    st = stats.partition_column_stats(df, numeric_cols=(),
+                                      nullable_cols=("transcript",))
+    v = stats.null_rate_verdicts(st).collect()
+    assert [(r.part, r.passed, r.observed) for r in v] == [(0, True, "0.005")]
+    assert stats.null_violations(df).count() == 0
 
 
 def test_drift_verdict_matrix(spark, clips):
@@ -215,28 +251,28 @@ def test_ks_pvalue_matches_scipy_style_oracle(spark, clips):
 
 
 def test_ks_pvalue_reuses_one_histogram(spark, clips):
-    """drift_scores_with_p must derive scores AND sample sizes from the one
-    materialized (part, bin) histogram: with no separate baseline frame its
-    whole plan reads the checkpointed counts, never the raw parquet again
-    (optimization round: the p-value variant used to rebuild its own lazy
-    histogram beside the checkpointed one — a second full scan)."""
-    plan = drift_dist.drift_scores_with_p(clips, "dur_ms") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" not in plan.lower()
-    assert "ExistingRDD" in plan
+    """drift_scores_with_p derives scores AND sample sizes from one
+    bin-count aggregation finalized on the driver: building it runs at
+    most 2 Spark jobs (the aggregation's shuffle stage and its collect),
+    and the returned plan holds literals, never reading the parquet again.
+    The former (part x bin) join grid ran 14 jobs here."""
+    df, n_jobs = _run_counting_jobs(
+        spark, lambda: drift_dist.drift_scores_with_p(clips, "dur_ms"))
+    assert n_jobs <= 2
+    assert "parquet" not in _plan(df).lower()
 
 
 def test_ks_pvalue_separate_baseline_one_histogram(spark, clips):
-    """With a separate ``baseline=`` frame, drift_scores_with_p builds that
-    frame's histogram once and shares it between the scores and n_base:
-    the plan reads only checkpointed counts, and the scores equal
-    drift_scores over the same inputs."""
-    from drift_detection_pibic___framework_spark.operators import drift_dist
-
+    """With a separate ``baseline=`` frame, drift_scores_with_p aggregates
+    that frame's bins once and shares them between the scores and n_base:
+    at most 2 Spark jobs per input frame, a returned plan that reads no
+    parquet, and scores equal to drift_scores over the same inputs."""
     checked = clips.filter("part >= 8")
-    df = drift_dist.drift_scores_with_p(checked, "dur_ms", baseline=clips)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "parquet" not in plan.lower()
+    df, n_jobs = _run_counting_jobs(
+        spark, lambda: drift_dist.drift_scores_with_p(
+            checked, "dur_ms", baseline=clips))
+    assert n_jobs <= 4
+    assert "parquet" not in _plan(df).lower()
     got = {r.part: (r.psi, r.ks, r.n_base) for r in df.collect()}
     want = {r.part: (r.psi, r.ks) for r in
             drift_dist.drift_scores(checked, "dur_ms",
@@ -278,13 +314,15 @@ def _lazy_suite_verdicts(clips, dim, baseline=None,
                          baseline_parts=drift_dist.DEFAULT_BASELINE_PARTS):
     """The suite as it was built before the fused passes: one lazy plan
     per check over a shared stats frame, unioned — the oracle for
-    ``suite.suite_verdicts`` (same operators, same thresholds)."""
+    ``suite.suite_verdicts`` (same operators, same thresholds; the drift
+    branch is the Spark bin grid of tests/drift_oracle.py, so the driver
+    scorer is not compared against itself)."""
     st = stats.partition_column_stats(clips)
     return (stats.null_rate_verdicts(st)
             .unionByName(stats.range_verdicts(st, "sr_hz", 8000, 48000))
             .unionByName(uniqueness.uniqueness_verdicts(clips))
             .unionByName(referential.referential_verdicts(clips, dim))
-            .unionByName(drift_dist.drift_verdicts(
+            .unionByName(drift_oracle.drift_verdicts(
                 clips, baseline=baseline, baseline_parts=baseline_parts)))
 
 
@@ -403,7 +441,8 @@ def test_fused_suite_number_formatting_matches_spark(spark):
 
     from pyspark.sql import functions as F
 
-    from drift_detection_pibic___framework_spark.plans import suite
+    from drift_detection_pibic___framework_spark.functions.literals import (
+        jround, jstr)
 
     rnd = random.Random(7)
     vals = [0.0, -0.0, 5e-4, 1e-3, 9.99e-4, 1e-7, 0.0078125, 2.5e-7,
@@ -414,8 +453,8 @@ def test_fused_suite_number_formatting_matches_spark(spark):
                                "i long, v double")
     for r in df.select("i", F.round("v", 6).alias("r"),
                        F.round("v", 6).cast("string").alias("s")).collect():
-        assert suite._jround(vals[r.i]) == r.r, vals[r.i]
-        assert suite._jstr(r.r) == r.s, r.r
+        assert jround(vals[r.i]) == r.r, vals[r.i]
+        assert jstr(r.r) == r.s, r.r
 
 
 def test_fused_suite_plan_shape(spark, clips, allowed_codecs):

@@ -67,3 +67,19 @@ def test_quarantine_broadcast_plan(spark):
     _, bad = QR.quarantine(clips, dim)
     plan = bad._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def test_quarantine_duplicated_dimension_rows(spark, clips, allowed_codecs):
+    """Every codec listed twice in the dimension changes neither output nor
+    the summary: rows are marked against the dimension's distinct codec
+    set, so no clip is joined twice."""
+    fixture = clips.drop("bytes")
+    dup = allowed_codecs.unionByName(allowed_codecs)
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r["rid"])
+    for got, want in zip(QR.quarantine(fixture, dup),
+                         QR.quarantine(fixture, allowed_codecs)):
+        assert rows(got) == rows(want)
+    assert (QR.quarantine_summary(fixture, dup).collect()
+            == QR.quarantine_summary(fixture, allowed_codecs).collect())
