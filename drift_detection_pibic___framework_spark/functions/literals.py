@@ -42,14 +42,32 @@ def jstr(x):
     return f"{'-' if sign else ''}{ds[0]}.{ds[1:] or '0'}E{exp + len(ds) - 1}"
 
 
+def _sql(x) -> str:
+    """``x`` as a Spark SQL literal of the type ``F.lit(x)`` gives it."""
+    if x is None:
+        return "NULL"
+    if isinstance(x, bool):
+        return "true" if x else "false"
+    if isinstance(x, int):
+        return str(x)
+    if isinstance(x, float):
+        return repr(x) + "D" if math.isfinite(x) else \
+            f"CAST('{jstr(x)}' AS DOUBLE)"
+    if isinstance(x, str):
+        return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {type(x).__name__}: {x!r}")
+
+
 def literal_frame(spark: SparkSession, rows: list,
                   schema: StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` order) as a one-partition DataFrame
     of ``schema``, nullability included (with no rows, every column is
-    nullable).  The rows are literals expanded in the JVM by ``inline``
-    over a one-row ``range``: ``createDataFrame`` of local rows is
-    RDD-backed, so collecting it runs a job, starts a Python worker per
-    task and writes one file per task."""
-    arr = F.array(*[F.struct(*[F.lit(x) for x in r]) for r in rows])
+    nullable).  The rows are one ``array(struct(...))`` SQL expression,
+    parsed in one JVM call and expanded by ``inline`` over a one-row
+    ``range``: ``createDataFrame`` of local rows is RDD-backed, so
+    collecting it runs a job, starts a Python worker per task and writes
+    one file per task."""
+    arr = F.expr("array(" + ", ".join(
+        "struct(" + ", ".join(map(_sql, r)) + ")" for r in rows) + ")")
     return (spark.range(0, 1, 1, 1)
             .select(F.inline(arr.cast(ArrayType(schema, not rows)))))

@@ -82,16 +82,22 @@ def baseline_counts(counts: dict, baseline_parts) -> Optional[list]:
     return [sum(c) for c in zip(*src)] if src else None
 
 
+KS_MIN_LAMBDA = 0.2
+
+
 def ks_p_value(d: float, n1: int, n2: int) -> float:
     """Asymptotic two-sample KS p-value: the Kolmogorov distribution tail
     Q(λ) = 2·Σ_{j≥1} (-1)^{j-1} e^{-2j²λ²} with the finite-sample correction
     λ = (√nₑ + 0.12 + 0.11/√nₑ)·D, nₑ = n₁n₂/(n₁+n₂) (Numerical Recipes
     §14.3; same series as the KSWIN oracle at detectors/oracle.py:346).
-    The series alternates and collapses double-exponentially, so 20 terms
-    are far past float64 exhaustion for any λ where p is distinguishable
-    from 1; the clamp keeps tiny-λ truncation inside [0, 1]."""
+    For λ >= ``KS_MIN_LAMBDA`` the 20-term partial sum is within 1e-15 of
+    Q(λ).  Below it the truncated series has not converged (at λ = 0 it
+    sums to 0) while Q(λ) > 1 - 1e-12, so p is 1.0 there, as Numerical
+    Recipes' ``probks`` returns 1 when its series does not converge."""
     ne = (float(n1) * n2) / (n1 + n2)
     lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
+    if lam < KS_MIN_LAMBDA:
+        return 1.0
     series = 0.0
     for j in range(1, 21):
         series += ((2.0 if j % 2 == 1 else -2.0)

@@ -191,50 +191,6 @@ def invariant_results(clips: DataFrame, clips_ref: DataFrame,
     return joined.mapInPandas(gen, RESULT_SCHEMA)
 
 
-def invariant_results_colocated(clips: DataFrame, ref_dir: str,
-                                store_rate: int = STORE_RATE) -> DataFrame:
-    """Zero-shuffle variant: ``clips_ref`` is stored co-partitioned with
-    ``clips`` (same part -> same file layout — the Iceberg identity-partition
-    / bucketed-table contract), so instead of a SortMergeJoin that shuffles
-    BOTH binary payloads, the kernel loads the matching ref partition
-    file(s) directly and aligns on rid in memory.
-
-    At production scale this is the bucketed-join elimination: both tables
-    bucketed by rid -> join requires no exchange. Here the executor-side
-    pyarrow read plays the bucket-local role; an LRU keeps one ref
-    partition per worker."""
-    import os
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        def ref_slice(part: int, lo: int, hi: int) -> pd.DataFrame:
-            # rid-range filter -> row-group pruning: a task reads only the
-            # ref row groups covering ITS split, not the whole partition
-            # (fixture files are written with 4096-row row groups)
-            f = os.path.join(ref_dir, f"part-{part:04d}.parquet")
-            return (pq.read_table(
-                f, columns=["rid", "bytes", "codec", "transcript"],
-                filters=[("rid", ">=", lo), ("rid", "<=", hi)])
-                .to_pandas().set_index("rid"))
-
-        for b in batches:
-            if not len(b):
-                continue
-            for part, grp in b.groupby("part"):
-                ref = ref_slice(int(part), int(grp["rid"].min()),
-                                int(grp["rid"].max())).loc[grp["rid"]]
-                merged = grp.assign(
-                    ref_bytes=ref["bytes"].to_numpy(),
-                    ref_codec=ref["codec"].to_numpy(),
-                    ref_transcript=ref["transcript"].to_numpy())
-                yield _batch_invariant(merged, store_rate)
-
-    cols = clips.select("rid", "clip_id", "part", "bytes", "codec",
-                        "dur_ms", "transcript")
-    return cols.mapInPandas(gen, RESULT_SCHEMA)
-
-
 def _pack_units(units: list, rows_per_task: int) -> list:
     """Greedy in-order packing of ``(clips_file, ref_file, row_group,
     n_rows)`` units: a task closes as soon as it holds ``rows_per_task``

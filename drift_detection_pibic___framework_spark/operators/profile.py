@@ -28,10 +28,11 @@ Scale design (10^12 rows):
   only extra cluster work is ONE restricted second pass collecting the
   value domain of columns the profile already proved low-cardinality —
   ``collect_set`` is never evaluated on a column that could be large.
-- ``suggested_suite_verdicts`` compiles the suggestions back into ONE
-  aggregation pass emitting the standard per-partition verdict rows
-  (part, check_name, passed, observed, expected) — the whole suggested
-  suite costs a single shuffle, like plans/suite.py's shared-stats design.
+- ``suggested_suite_verdicts`` runs the suggestions through the check
+  registry (``suite.contract_checks``): each constraint's aggregates ride
+  ONE ``groupBy(part)`` and the driver finalizes the standard verdict rows
+  (part, check_name, passed, observed, expected), exactly like the
+  hand-written suite in plans/suite.py.
 """
 
 from __future__ import annotations
@@ -564,90 +565,22 @@ def load_contract(path: str) -> list:
     return out
 
 
-def _norm_rows(suggestions) -> list:
-    """Accept a suggestions DataFrame, (column, constraint, params)
-    tuples/Rows, or contract-JSON dicts — every compile surface takes any
-    of the three."""
-    if isinstance(suggestions, DataFrame):
-        suggestions = suggestions.collect()
-    return [(r["column"], r["constraint"], r["params"])
-            if isinstance(r, dict) else (r[0], r[1], r[2])
-            for r in suggestions]
-
-
 def suggested_suite_verdicts(df: DataFrame, suggestions,
                              part_col: str = "part") -> DataFrame:
-    """Run a suggestion set as per-partition checks: ONE aggregation pass
-    computes every suggested constraint's per-partition pass/fail, emitted
-    in the standard verdict schema (part, check_name, passed, observed,
-    expected) that plans/runner.py persists.
+    """Run a suggestion set as per-partition checks, emitted in the
+    standard verdict schema (part, check_name, passed, observed, expected)
+    that plans/runner.py persists.
 
     ``suggestions`` is the DataFrame from ``suggest_constraints`` or an
-    equivalent list of (column, constraint, params) rows; it is collected
-    (bounded: a handful of rows per column) and compiled into column
-    expressions — the suite itself never leaves the JVM.
-    """
-    suggestions = _norm_rows(suggestions)
-    if not suggestions:         # empty contract: no checks, no rows
-        return (df.select(F.col(part_col)).limit(0)
-                .select(part_col,
-                        F.lit("").alias("check_name"),
-                        F.lit(True).alias("passed"),
-                        F.lit("").alias("observed"),
-                        F.lit("").alias("expected")))
-    aggs, verdicts = [], []
-
-    def emit(name, passed, observed, expected):
-        verdicts.append(F.struct(
-            F.lit(name).alias("check_name"),
-            passed.alias("passed"),
-            observed.cast("string").alias("observed"),
-            F.lit(expected).alias("expected")))
-
-    for i, s in enumerate(suggestions):
-        col, constraint, params = s[0], s[1], s[2]
-        if constraint == "not_null":
-            a = F.sum(F.col(col).isNull().cast("long")).alias(f"_a{i}")
-            aggs.append(a)
-            emit(f"not_null({col})", F.col(f"_a{i}") == 0,
-                 F.col(f"_a{i}"), "0 nulls")
-        elif constraint == "completeness_pct_ge":
-            pct = int(params)
-            a = F.round(F.avg(F.col(col).isNotNull().cast("double")) * 100,
-                        6).alias(f"_a{i}")
-            aggs.append(a)
-            emit(f"completeness({col})", F.col(f"_a{i}") >= pct,
-                 F.col(f"_a{i}"), f">= {pct}%")
-        elif constraint == "unique":
-            aggs += [F.count_distinct(F.col(col)).alias(f"_a{i}"),
-                     F.count(F.col(col)).alias(f"_b{i}")]
-            emit(f"unique({col})", F.col(f"_a{i}") == F.col(f"_b{i}"),
-                 F.concat_ws("/", F.col(f"_a{i}"), F.col(f"_b{i}")),
-                 "distinct = rows")
-        elif constraint == "range":
-            lo, hi = params.strip("[]").split(",")
-            lo, hi = float(lo), float(hi)
-            aggs += [F.min(F.col(col).cast("double")).alias(f"_a{i}"),
-                     F.max(F.col(col).cast("double")).alias(f"_b{i}")]
-            emit(f"range({col})",
-                 (F.col(f"_a{i}") >= lo) & (F.col(f"_b{i}") <= hi),
-                 F.concat_ws("..", F.col(f"_a{i}"), F.col(f"_b{i}")),
-                 f"[{_fmt_num(lo)}, {_fmt_num(hi)}]")
-        elif constraint == "isin":
-            domain = params.split(",") if params else []
-            bad = (F.col(col).isNotNull()
-                   & ~F.col(col).cast("string").isin(domain))
-            aggs.append(F.sum(bad.cast("long")).alias(f"_a{i}"))
-            emit(f"isin({col})", F.col(f"_a{i}") == 0,
-                 F.col(f"_a{i}"), f"all in {{{params}}}")
-        else:
-            raise ValueError(f"unknown suggested constraint: {constraint}")
-
-    agged = df.groupBy(part_col).agg(*aggs)
-    return (agged.select(F.col(part_col),
-                         F.explode(F.array(*verdicts)).alias("v"))
-            .select(part_col, "v.check_name", "v.passed", "v.observed",
-                    "v.expected"))
+    equivalent list of (column, constraint, params) rows; it compiles to
+    ``suite.contract_checks`` and runs through ``suite.collect_suite``:
+    one aggregation pass, verdicts finalized on the driver."""
+    from ..plans import suite
+    df = df.withColumnRenamed(part_col, "part")
+    run = suite.collect_suite(df, None,
+                              checks=suite.contract_checks(suggestions))
+    return (suite.verdict_frame(df, run.verdicts)
+            .withColumnRenamed("part", part_col))
 
 
 def suggested_suite_violations(df: DataFrame, suggestions,
@@ -665,7 +598,7 @@ def suggested_suite_violations(df: DataFrame, suggestions,
     alone cannot breach them) and emit no rows here — their granularity is
     ``suggested_suite_verdicts``, exactly like dist_drift in the
     hand-written suite (plans/suite.py)."""
-    suggestions = _norm_rows(suggestions)
+    from ..plans import suite
     null_s = F.lit(None).cast("string")
 
     def viol(name, bad, observed, expected):
@@ -677,30 +610,8 @@ def suggested_suite_violations(df: DataFrame, suggestions,
                     "struct<check_name:string,observed:string,"
                     "expected:string>"))
 
-    structs = []
-    for s in suggestions:
-        col, constraint, params = s[0], s[1], s[2]
-        if constraint == "not_null":
-            structs.append(viol(f"not_null({col})", F.col(col).isNull(),
-                                F.lit("NULL"), f"non-null {col}"))
-        elif constraint == "range":
-            lo, hi = (float(x) for x in params.strip("[]").split(","))
-            v = F.col(col).cast("double")
-            structs.append(viol(f"range({col})",
-                                v.isNotNull() & ((v < lo) | (v > hi)),
-                                F.col(col),
-                                f"[{_fmt_num(lo)}, {_fmt_num(hi)}]"))
-        elif constraint == "isin":
-            domain = params.split(",") if params else []
-            structs.append(viol(
-                f"isin({col})",
-                F.col(col).isNotNull()
-                & ~F.col(col).cast("string").isin(domain),
-                F.col(col), f"in {{{params}}}"))
-        elif constraint in ("unique", "completeness_pct_ge"):
-            continue            # partition-scope: verdicts only
-        else:
-            raise ValueError(f"unknown suggested constraint: {constraint}")
+    structs = [viol(c.name, *c.breach)
+               for c in suite.contract_checks(suggestions) if c.breach]
     if not structs:
         return (df.select(F.col(id_col), F.col(part_col)).limit(0)
                 .select(id_col, F.lit("").alias("check_name"),

@@ -2,12 +2,14 @@
 suite (SURVEY §2.10 U1 "Check protocol").
 
 Every consumer (batch runner, spark-submit job, structured-streaming
-front-end, bench) builds its suite from ``CHECKS`` via the helpers below.
-Each check pairs a finalizer with its violation builder (the reference's
-per-check pass/fail + violation rows contract, north_rule), names the
-aggregate columns it reads, and says whether it is ``streaming_safe``:
-computable inside a single micro-batch (no global baseline or
-cross-batch scan needed).
+front-end, bench) builds its suite from ``CHECKS`` via the helpers below,
+and a data contract's (column, constraint, params) rows compile to the
+same ``Check`` type (``contract_checks``; operators/profile.py suggests
+the contracts).  Each check pairs a finalizer with its violation builder
+(the reference's per-check pass/fail + violation rows contract,
+north_rule), names the aggregate columns it reads, and says whether it is
+``streaming_safe``: computable inside a single micro-batch (no global
+baseline or cross-batch scan needed).
 
 Verdicts follow the analyzer model of Deequ (Schelter et al., "Automating
 Large-Scale Data Quality Verification", VLDB 2018): every check's
@@ -17,7 +19,9 @@ O(parts x (checks + bins)) collected numbers into verdict rows.
 - Pass 1 is ONE ``groupBy(part)`` aggregation over the clips,
   broadcast-left-joined to the codec dimension. It carries the
   ``partition_column_stats`` columns, the codec-miss count and the 40
-  drift bins (``drift_dist.bin_aggs``).
+  drift bins (``drift_dist.bin_aggs``); a contract check adds its own
+  aggregates (null and miss counts, completeness, distinct and row counts,
+  min/max), and a contract alone needs neither the stats nor the join.
 - Pass 2 is ``groupBy(part, clip_id).count()`` -> ``groupBy(part)``: the
   exact distinct id count.  It stays a pass of its own: a
   ``count_distinct`` in pass 1 makes Spark's distinct rewrite (Expand)
@@ -38,16 +42,17 @@ check failed.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from functools import reduce
-from typing import Callable, NamedTuple, Optional
+from typing import Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BooleanType, StringType, StructField,
                                StructType)
 
 from ..functions.literals import jstr, literal_frame
-from ..operators import drift_dist, referential, stats, uniqueness
+from ..operators import drift_dist, profile, referential, stats, uniqueness
 
 NULL_RATE_MAX = 0.005
 SR_RANGE = (8000, 48000)
@@ -75,12 +80,17 @@ class CheckContext:
 @dataclass(frozen=True)
 class Check:
     name: str                                   # emitted check_name
-    # "stats" | "misses" | "distinct" | "bins" (bins: the baseline window)
-    aggregates: str
+    # the shared pass it reads, "stats" | "misses" | "distinct" | "bins"
+    # (bins: the baseline window), or its own {name: aggregate Column}s
+    # riding pass 1
+    aggregates: Union[str, dict]
     # (aggregate row, baseline bins or None) -> (passed, observed, expected)
     finalize: Callable[[dict, Optional[list]], tuple]
     violations: Optional[Callable[[CheckContext], DataFrame]]
     streaming_safe: bool
+    # a row-scope contract check's (breaching-row predicate, observed
+    # Column, expected) for profile.suggested_suite_violations
+    breach: Optional[tuple] = None
 
 
 @dataclass(frozen=True)
@@ -143,22 +153,122 @@ CHECKS: tuple = (
 )
 
 
+# -- data contracts: (column, constraint, params) rows as checks -----------
+# Each contract row becomes a Check with its own pass-1 aggregates (the
+# Spark expressions computing every number); its finalizer only compares
+# and formats.  Comparisons follow Spark's double order (NaN above every
+# number, NaN == NaN) and its three-valued AND.
+
+def _le(a: float, b: float) -> bool:
+    """Spark's ``a <= b`` on non-null doubles."""
+    return math.isnan(b) or (not math.isnan(a) and a <= b)
+
+
+def _c_not_null(col, _params, k):
+    n = F.col(col).isNull()
+    return ({k: F.count_if(n)},
+            lambda r, _b: (r[k] == 0, str(r[k]), "0 nulls"),
+            (n, F.lit("NULL"), f"non-null {col}"))
+
+
+def _c_completeness(col, params, k):
+    pct = int(params)
+    return ({k: F.round(F.avg(F.col(col).isNotNull().cast("double")) * 100,
+                        6)},
+            lambda r, _b: (r[k] >= pct, jstr(r[k]), f">= {pct}%"), None)
+
+
+def _c_unique(col, _params, k):
+    d, n = k + "d", k + "n"
+    return ({d: F.count_distinct(F.col(col)), n: F.count(F.col(col))},
+            lambda r, _b: (r[d] == r[n], f"{r[d]}/{r[n]}",
+                           "distinct = rows"), None)
+
+
+def _c_range(col, params, k):
+    lo, hi = (float(x) for x in params.strip("[]").split(","))
+    expected = f"[{profile._fmt_num(lo)}, {profile._fmt_num(hi)}]"
+    lo_k, hi_k, v = k + "lo", k + "hi", F.col(col).cast("double")
+
+    def fin(r, _b):
+        mn, mx = r[lo_k], r[hi_k]
+        passed = None if mn is None else _le(lo, mn) and _le(mx, hi)
+        return (passed, "..".join(jstr(x) for x in (mn, mx) if x is not None),
+                expected)
+    return ({lo_k: F.min(v), hi_k: F.max(v)}, fin,
+            (v.isNotNull() & ((v < lo) | (v > hi)), F.col(col), expected))
+
+
+def _c_isin(col, params, k):
+    bad = (F.col(col).isNotNull()
+           & ~F.col(col).cast("string").isin(params.split(",") if params
+                                              else []))
+    return ({k: F.count_if(bad)},
+            lambda r, _b: (r[k] == 0, str(r[k]), f"all in {{{params}}}"),
+            (bad, F.col(col), f"in {{{params}}}"))
+
+
+_CONSTRAINTS = {"not_null": ("not_null", _c_not_null),
+                "completeness_pct_ge": ("completeness", _c_completeness),
+                "unique": ("unique", _c_unique),
+                "range": ("range", _c_range),
+                "isin": ("isin", _c_isin)}
+
+
+def contract_checks(contract) -> list:
+    """A data contract as Checks, one per row, in contract order.
+    ``contract`` is a suggestions DataFrame (``profile.suggest_constraints``),
+    (column, constraint, params) tuples/Rows, or contract-JSON dicts.
+    ``unique`` is not ``streaming_safe``: a partition may span
+    micro-batches, as for ``unique(clip_id)``."""
+    if isinstance(contract, DataFrame):
+        contract = contract.collect()
+    checks = []
+    for i, r in enumerate(contract):
+        col, constraint, params = ((r["column"], r["constraint"], r["params"])
+                                   if isinstance(r, dict) else r[:3])
+        if constraint not in _CONSTRAINTS:
+            raise ValueError(f"unknown suggested constraint: {constraint}")
+        label, build = _CONSTRAINTS[constraint]
+        aggs, fin, breach = build(col, params, f"_c{i}_")
+        checks.append(Check(f"{label}({col})", aggs, fin, None,
+                            streaming_safe=constraint != "unique",
+                            breach=breach))
+    return checks
+
+
 # -- the two passes ---------------------------------------------------------
 
-def aggregate_plan(clips: DataFrame, dim: DataFrame, misses: bool = True,
-                   bins: bool = True) -> DataFrame:
-    """Pass 1: ``partition_column_stats`` plus the codec-miss count and
-    the drift bins, one ``groupBy(part)``.  The broadcast side is the
-    dimension's distinct codec set, so a repeated codec row cannot repeat
-    its clips in the aggregates; the set is built in one partition
-    (``coalesce(1)``), which needs no shuffle."""
+def _pass1(clips: DataFrame, dim: DataFrame, checks) -> tuple:
+    """(the shared passes ``checks`` read, their pass-1 plan, the names of
+    its aggregates beyond the stats)."""
+    reads = {c.aggregates for c in checks if isinstance(c.aggregates, str)}
     extra = {}
-    if misses:
+    if "misses" in reads:
         clips = referential.mark_hits(clips, dim)
         extra["codec_misses"] = F.count_if(F.col("_hit").isNull())
-    if bins:
+    if "bins" in reads:
         extra["bins"] = drift_dist.bin_aggs(DRIFT_COL, BIN_WIDTH, N_BINS)
-    return stats.partition_column_stats(clips, extra_aggs=extra)
+    for c in checks:
+        if isinstance(c.aggregates, dict):
+            extra.update(c.aggregates)
+    agg = (stats.partition_column_stats(clips, extra_aggs=extra) if reads
+           else clips.groupBy("part").agg(
+               *[c.alias(n) for n, c in extra.items()]))
+    return reads, agg, set(extra)
+
+
+def aggregate_plan(clips: DataFrame, dim: DataFrame,
+                   checks=CHECKS) -> DataFrame:
+    """Pass 1 of ``checks``: one ``groupBy(part)`` carrying the
+    ``partition_column_stats`` columns (when a check reads a shared pass),
+    the codec-miss count and the drift bins (when a check reads them) and
+    every check's own aggregates.  The broadcast side of the miss count is
+    the dimension's distinct codec set, so a repeated codec row cannot
+    repeat its clips in the aggregates; the set is built in one partition
+    (``coalesce(1)``), which needs no shuffle.  A suite reading no shared
+    pass (a data contract) needs only a ``part`` column and no ``dim``."""
+    return _pass1(clips, dim, checks)[1]
 
 
 def distinct_plan(clips: DataFrame, col: str = "clip_id") -> DataFrame:
@@ -175,27 +285,28 @@ def collect_suite(clips: DataFrame, dim: DataFrame,
     The drift baseline comes from ``baseline`` when given (one more,
     bins-only aggregation), else from the ``baseline_parts`` rows of
     ``clips`` itself, at no extra cost.  A partition with no rows has no
-    aggregate row and so no verdicts."""
+    aggregate row and so no verdicts; no checks run no Spark job."""
+    if not checks:
+        return SuiteRun({}, [])
     baseline_parts = tuple(drift_dist.DEFAULT_BASELINE_PARTS
                            if baseline_parts is None else baseline_parts)
-    need = {c.aggregates for c in checks}
-    agg = aggregate_plan(clips, dim, misses="misses" in need,
-                         bins="bins" in need)
-    stat_cols = [c for c in agg.columns if c not in ("codec_misses", "bins")]
+    reads, agg, extra = _pass1(clips, dim, checks)
+    stat_cols = [c for c in agg.columns if c not in extra]
     rows = {r["part"]: r.asDict() for r in agg.collect()}
-    if "distinct" in need:
+    if "distinct" in reads:
         for r in distinct_plan(clips).collect():
             if r["part"] in rows:
                 rows[r["part"]]["clip_id_distinct"] = r["clip_id_distinct"]
     base = None
-    if "bins" in need:
+    if "bins" in reads:
         counts = ({p: r["bins"] for p, r in rows.items()} if baseline is None
                   else drift_dist.bin_counts(baseline, DRIFT_COL, BIN_WIDTH,
                                              N_BINS, baseline_parts))
         base = drift_dist.baseline_counts(counts, baseline_parts)
     report = sorted(rows, key=lambda p: (p is None, p))
     return SuiteRun(
-        stats={p: {c: rows[p][c] for c in stat_cols} for p in report},
+        stats={p: {c: rows[p][c] for c in stat_cols}
+               for p in report} if reads else {},
         verdicts=[Verdict(p, c.name, *c.finalize(rows[p], base))
                   for p in report for c in checks])
 
@@ -249,10 +360,11 @@ def failing_violations(clips: DataFrame, dim: DataFrame,
     return _union(frames) if frames else None
 
 
-def streaming_suite_verdicts(batch: DataFrame, dim: DataFrame) -> DataFrame:
-    """The micro-batch-safe subset (drift vs baseline and cross-batch
-    uniqueness are owned by the batch runner): pass 1 alone, without the
-    drift bins."""
+def streaming_suite_verdicts(batch: DataFrame, dim: DataFrame,
+                             checks=CHECKS) -> DataFrame:
+    """The micro-batch-safe subset of ``checks`` (drift vs baseline and
+    cross-batch uniqueness are owned by the batch runner): pass 1 alone,
+    without the drift bins."""
     run = collect_suite(batch, dim,
-                        checks=[c for c in CHECKS if c.streaming_safe])
+                        checks=[c for c in checks if c.streaming_safe])
     return verdict_frame(batch, run.verdicts)

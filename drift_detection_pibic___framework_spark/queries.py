@@ -1341,8 +1341,8 @@ def clips_invariant_results(spark, sf_dir):
     (input_hint) — aggregated pass/fail per partition."""
     from .operators import invariant
     d = G.ensure_fixtures(G.sf_label_from_dir(sf_dir))
-    c = clips_df(spark, sf_dir)
-    res = invariant.invariant_results_colocated(c, f"{d}/clips_ref")
+    res = invariant.invariant_results_filepairs(spark, f"{d}/clips",
+                                                f"{d}/clips_ref")
     per = res.groupBy("part").agg(
         F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("bad"),
         F.count(F.lit(1)).alias("n"))
@@ -4187,11 +4187,11 @@ lam AS (
   FROM ks k JOIN tot t ON t.part = k.part CROSS JOIN btot bt),
 series AS (SELECT unnest(generate_series(1, 20)) AS j)
 SELECT part, psi, ks, n_part, n_base,
-       ROUND(LEAST(1.0, GREATEST(0.0,
+       CASE WHEN l < 0.2 THEN 1.0 ELSE ROUND(LEAST(1.0, GREATEST(0.0,
            SUM((CASE WHEN j % 2 = 1 THEN 2.0 ELSE -2.0 END)
-               * exp(-2.0 * (j * l) * (j * l))))), 6) AS ks_p
+               * exp(-2.0 * (j * l) * (j * l))))), 6) END AS ks_p
 FROM lam CROSS JOIN series
-GROUP BY part, psi, ks, n_part, n_base
+GROUP BY part, psi, ks, n_part, n_base, l
 """)
 def clips_ks_pvalue(spark, sf_dir):
     """Binned-KS drift scores WITH asymptotic significance
@@ -4200,8 +4200,8 @@ def clips_ks_pvalue(spark, sf_dir):
     (SURVEY §7.2 step 4's "ECDF-based two-sample KS with asymptotic
     p-value").  Baseline parts 0-3: drifted partitions (8+) collapse to
     p ~ 0 while in-baseline partitions stay insignificant.  The 20-term
-    alternating series runs on the driver over the collected bin
-    counts."""
+    alternating series runs on the driver over the collected bin counts;
+    below λ = 0.2, where it has not converged, p is 1."""
     from .operators import drift_dist
     c = clips_df(spark, sf_dir)
     return drift_dist.drift_scores_with_p(c, "dur_ms")

@@ -9,14 +9,16 @@ new clip files landing in the table directory are validated as they arrive.
 Design:
 - ``readStream`` file source over the clips directory (schema pinned — a
   streaming source cannot infer);
-- ``foreachBatch``: each micro-batch runs the SAME batch-check operators
-  (stats/null-rate/referential per partition observed in the batch) and
-  writes verdict rows to a parquet sink partitioned by epoch.  foreachBatch
-  is at-least-once — a crash between the write and the checkpoint commit
-  replays the epoch — so the write OVERWRITES the epoch's own partition
-  (dynamic partitionOverwriteMode): a replayed epoch replaces its previous
-  output instead of duplicating it, making the sink idempotent and the
-  pipeline exactly-once end-to-end;
+- ``foreachBatch``: each micro-batch runs the ``streaming_safe`` checks of
+  the one check registry (plans/suite.py) — the hand-written suite in
+  ``validate_stream``, a data contract's compiled checks in
+  ``contract_stream`` — through the same driver-finalized verdict path as
+  the batch runner, and writes the verdict rows to a parquet sink
+  partitioned by epoch.  foreachBatch is at-least-once — a crash between
+  the write and the checkpoint commit replays the epoch — so every sink
+  write (``_write_epoch``) OVERWRITES only the epoch's own partition: a
+  replayed epoch replaces its previous output instead of duplicating it,
+  making the sink idempotent and the pipeline exactly-once end-to-end;
 - drift / sequential-detector series monitoring is owned by the BATCH
   runner (plans/runner.py): a micro-batch need not contain the baseline
   window, and the prequential steppers advance in partition order there.
@@ -28,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
+
+from ..plans import suite
 
 CLIPS_STREAM_SCHEMA = StructType([
     StructField("rid", LongType()),
@@ -51,8 +55,39 @@ def stream_clips(spark: SparkSession, clips_dir: str,
 def micro_batch_verdicts(batch: DataFrame, dim: DataFrame) -> DataFrame:
     """The per-micro-batch check suite: the ``streaming_safe`` subset of
     the single check registry (plans/suite.py)."""
-    from ..plans import suite
     return suite.streaming_suite_verdicts(batch, dim)
+
+
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write ``df`` as the ``epoch`` partition of the parquet sink at
+    ``path``.  The dynamic overwrite touches only that partition, so an
+    at-least-once replay of the micro-batch replaces its own earlier
+    output instead of duplicating it (ADVICE r1)."""
+    (df.withColumn("epoch", F.lit(epoch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("epoch")
+     .parquet(path))
+
+
+def _start(stream: DataFrame, handle, checkpoint_dir: str,
+           available_now: bool):
+    writer = (stream.writeStream.foreachBatch(handle)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _verdict_stream(spark: SparkSession, clips_dir: str, dim, checks,
+                    out_dir: str, checkpoint_dir: str, available_now: bool,
+                    max_files_per_trigger: int = 4):
+    def handle(batch: DataFrame, epoch_id: int) -> None:
+        _write_epoch(suite.streaming_suite_verdicts(batch, dim, checks),
+                     epoch_id, out_dir)
+
+    return _start(stream_clips(spark, clips_dir, max_files_per_trigger),
+                  handle, checkpoint_dir, available_now)
 
 
 def validate_stream(spark: SparkSession, clips_dir: str, dim_path: str,
@@ -61,25 +96,9 @@ def validate_stream(spark: SparkSession, clips_dir: str, dim_path: str,
     """Start the streaming validation; returns the StreamingQuery.
     ``available_now=True`` drains everything currently in the directory and
     stops (test/replay mode); False runs continuously."""
-    dim = spark.read.parquet(dim_path)
-    stream = stream_clips(spark, clips_dir)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        v = micro_batch_verdicts(batch, dim) \
-            .withColumn("epoch", F.lit(epoch_id))
-        # idempotent per epoch: dynamic overwrite touches only the epoch
-        # partitions present in v, so an at-least-once replay of this
-        # micro-batch replaces its own earlier output (ADVICE r1).
-        (v.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("epoch")
-         .parquet(out_dir))
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _verdict_stream(spark, clips_dir, spark.read.parquet(dim_path),
+                           suite.CHECKS, out_dir, checkpoint_dir,
+                           available_now)
 
 
 def contract_stream(spark: SparkSession, clips_dir: str, contract,
@@ -88,41 +107,16 @@ def contract_stream(spark: SparkSession, clips_dir: str, contract,
                     max_files_per_trigger: int = 4):
     """Enforce a data contract (operators/profile.py suggestions — e.g.
     the JSON written by ``jobs/validate.py --suggest``) CONTINUOUSLY:
-    each micro-batch runs the compiled suggested suite and writes
-    per-partition verdict rows to an epoch-partitioned parquet sink
-    (same idempotent dynamic-overwrite scheme as validate_stream).
-
-    Streaming safety mirrors the hand-written registry (plans/suite.py):
-    ``unique`` is DROPPED — a partition may span micro-batches, so
-    within-batch distinct==rows proves nothing about the table (exactly
-    why unique(clip_id) is streaming_safe=False there); cross-batch
-    uniqueness belongs to the batch runner or the HLL commit gate.  All
-    other constraints (not_null / completeness floor / range / isin) are
-    row- or rate-expressible within a batch, like the null-rate and
-    range checks the streaming suite already runs.  Returns the
+    each micro-batch runs the contract's checks (``suite.contract_checks``)
+    through the same verdict path and epoch sink as ``validate_stream``.
+    Its ``unique`` checks are not streaming-safe and so do not run (a
+    partition may span micro-batches; cross-batch uniqueness belongs to
+    the batch runner or the HLL commit gate).  Returns the
     StreamingQuery."""
-    from ..operators import profile as PR
-
-    rows = (contract.collect() if isinstance(contract, DataFrame)
-            else list(contract))
-    rows = [(r["column"], r["constraint"], r["params"])
-            if isinstance(r, dict) else (r[0], r[1], r[2]) for r in rows]
-    safe = [s for s in rows if s[1] != "unique"]
-    stream = stream_clips(spark, clips_dir, max_files_per_trigger)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        v = PR.suggested_suite_verdicts(batch, safe) \
-            .withColumn("epoch", F.lit(epoch_id))
-        (v.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("epoch")
-         .parquet(out_dir))
-
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _verdict_stream(spark, clips_dir, None,
+                           suite.contract_checks(contract), out_dir,
+                           checkpoint_dir, available_now,
+                           max_files_per_trigger)
 
 
 GATE_TABLE = "stream_ingest"
@@ -190,23 +184,15 @@ def validate_stream_with_gate(spark: SparkSession, clips_dir: str,
     io = ParquetTableIO(gate_root)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        v = micro_batch_verdicts(batch, dim) \
-            .withColumn("epoch", F.lit(epoch_id))
-        (v.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("epoch")
-         .parquet(out_dir))
+        _write_epoch(micro_batch_verdicts(batch, dim), epoch_id, out_dir)
         admit = batch
         if quarantine:
             from ..operators import quarantine as QR
             admit, bad = QR.quarantine(batch, dim)
-            (bad.select("clip_id", "part",
-                        F.array_join("reasons", ",").alias("reasons"))
-             .withColumn("epoch", F.lit(epoch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("epoch")
-             .parquet(out_dir + "_quarantined"))
+            _write_epoch(bad.select("clip_id", "part",
+                                    F.array_join("reasons", ",")
+                                    .alias("reasons")),
+                         epoch_id, out_dir + "_quarantined")
         if int(epoch_id) not in io.read_manifest(GATE_SCOPE):
             commit_df = admit.select("clip_id", "sr_hz", "dur_ms", "codec")
             stats_cols = ("sr_hz", "dur_ms")
@@ -263,18 +249,10 @@ def validate_stream_with_gate(spark: SparkSession, clips_dir: str,
                     bool(d["drift"])))
         gates = spark.createDataFrame(
             rows, "gate string, subject string, detail string, "
-                  "flagged boolean") \
-            .withColumn("epoch", F.lit(epoch_id))
-        (gates.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("epoch")
-         .parquet(out_dir + "_gates"))
+                  "flagged boolean")
+        _write_epoch(gates, epoch_id, out_dir + "_gates")
         if compact_after and \
                 len(io.snapshot_stats(GATE_TABLE)) > compact_after:
             io.compact_stats(spark, GATE_TABLE, keep_last=compact_keep)
 
-    writer = (stream.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, handle, checkpoint_dir, available_now)

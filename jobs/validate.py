@@ -265,13 +265,14 @@ def main() -> int:
             return 1 if drifting else 0
 
         contract = PR.load_contract(args.run_contract)
-        verdicts = (PR.suggested_suite_verdicts(clips, contract)
-                    .orderBy("part", "check_name").collect())
-        n_fail = sum(1 for r in verdicts if not r["passed"])
-        for r in verdicts:
-            mark = "PASS" if r["passed"] else "FAIL"
-            print(f"part={r['part']:>3} {r['check_name']:<26} {mark}  "
-                  f"observed={r['observed']}  expected={r['expected']}")
+        verdicts = sorted(suite.collect_suite(
+            clips, None, checks=suite.contract_checks(contract)).verdicts,
+            key=lambda v: (v.part, v.check_name))
+        n_fail = sum(1 for v in verdicts if not v.passed)
+        for v in verdicts:
+            mark = "PASS" if v.passed else "FAIL"
+            print(f"part={v.part:>3} {v.check_name:<26} {mark}  "
+                  f"observed={v.observed}  expected={v.expected}")
         n_viol = None
         if args.violations_out:
             v = PR.suggested_suite_violations(clips, contract)

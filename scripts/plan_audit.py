@@ -315,8 +315,9 @@ def main() -> int:
         {"no_cartesian": True, "top_k": True}))
 
     # constraint-suggestion profiler: the profile is ONE aggregation pass
-    # (map-side partials, bytes pruned); the compiled suggested suite is
-    # likewise one agg pass emitting every verdict row
+    # (map-side partials, bytes pruned); a compiled contract's checks ride
+    # the check registry's pass 1, likewise one agg pass, and the driver
+    # finalizes every verdict row
     from drift_detection_pibic___framework_spark.operators import (
         profile as PRop)
     cases.append((
@@ -334,11 +335,12 @@ def main() -> int:
         {"no_bytes_scan": True, "no_cartesian": True,
          "zero_exchange": True, "codegen": True}))
     cases.append((
-        "suggested_suite_verdicts (whole suggested suite in one agg pass)",
-        PRop.suggested_suite_verdicts(clips, [
+        "suggested_suite_verdicts pass 1 (a compiled contract's "
+        "aggregates, one groupBy(part))",
+        SU.aggregate_plan(clips, None, SU.contract_checks([
             ("sr_hz", "range", "[8000,48000]"),
             ("codec", "isin", "alaw,mulaw,pcm_s16le"),
-            ("transcript", "not_null", "")]),
+            ("transcript", "not_null", "")])),
         {"no_bytes_scan": True, "no_cartesian": True,
          "single_exchange": True}))
 

@@ -54,7 +54,7 @@ def proportions_grid(clips: DataFrame, col: str, width: float, n_bins: int,
 
 def ks_asymptotic_p(d, n1, n2, terms: int = 20):
     """The Kolmogorov tail series as a column expression, clamped to
-    [0, 1]."""
+    [0, 1]; 1.0 below λ = 0.2, where the series has not converged."""
     ne = (n1.cast("double") * n2) / (n1 + n2)
     lam = (F.sqrt(ne) + 0.12 + 0.11 / F.sqrt(ne)) * d
     term = lambda j: (F.when(j % 2 == 1, 2.0).otherwise(-2.0)  # noqa: E731
@@ -62,7 +62,8 @@ def ks_asymptotic_p(d, n1, n2, terms: int = 20):
     series = F.aggregate(F.sequence(F.lit(1), F.lit(int(terms))),
                          F.lit(0.0),
                          lambda acc, j: acc + term(j.cast("double")))
-    return F.least(F.lit(1.0), F.greatest(F.lit(0.0), series))
+    return F.when(lam < 0.2, F.lit(1.0)).otherwise(
+        F.least(F.lit(1.0), F.greatest(F.lit(0.0), series)))
 
 
 def scores(clips, col="dur_ms", width=100.0, n_bins=40,

@@ -75,3 +75,14 @@ def test_absent_baseline_scores_are_null(spark, clips):
         (r.psi, r.ks, r.n_base, r.ks_p) == (None, None, None, 0.0)
         and r.n_part > 0 for r in rows)
     assert not any(r.passed for r in D.drift_verdicts(late).collect())
+
+
+def test_ks_p_value_is_one_at_zero_and_never_increases():
+    """Below the series' convergence point p is 1 (the truncated series
+    summed to 0 at d = 0), and p never increases as d grows."""
+    assert D.ks_p_value(0.0, 200, 800) == 1.0
+    assert D.ks_p_value(0.001, 200, 800) == 1.0
+    for n1, n2 in ((200, 800), (5, 7), (40_000, 160_000)):
+        ps = [D.ks_p_value(i / 10_000, n1, n2)
+              for i in range(10_001)]
+        assert all(b <= a for a, b in zip(ps, ps[1:])), (n1, n2)

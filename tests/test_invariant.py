@@ -64,16 +64,6 @@ def test_transcript_mismatch_detected(spark, clips, clips_ref):
     assert (p1["snr_db"] >= 30).all()  # audio untouched
 
 
-def test_colocated_equals_join_variant(spark, clips, clips_ref, fixture_dir):
-    """The zero-shuffle colocated path must produce row-identical results
-    to the join formulation."""
-    a = (invariant.invariant_results(clips, clips_ref)
-         .orderBy("rid").collect())
-    b = (invariant.invariant_results_colocated(clips, f"{fixture_dir}/clips_ref")
-         .orderBy("rid").collect())
-    assert a == b
-
-
 def test_filepairs_equals_join_variant(spark, clips, clips_ref, fixture_dir):
     a = (invariant.invariant_results(clips, clips_ref)
          .orderBy("rid").collect())
