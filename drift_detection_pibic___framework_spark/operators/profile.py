@@ -272,6 +272,74 @@ def suggest_constraints(df: DataFrame, cols: list = None,
 # zero-scan suggestion from TableIO commit sidecars
 # -------------------------------------------------------------------------
 
+def sidecar_suggestions(sides: list, base: dict, max_domain: int = 10,
+                        hll_rse: float = 0.016) -> list:
+    """``suggest_from_sidecars``'s (column, constraint, params) rows from
+    a table's sidecars and ``base``, the fold of all but the latest run
+    against it (``fold_sidecars(sides[:-1], spark, sides[-1])``)."""
+    import base64
+
+    from ..functions.sketches import MisraGries
+    from ..sources.tableio import fold_sidecars
+
+    fold = fold_sidecars([base, sides[-1]])      # == the fold of all
+    rows_total = fold["rows"]
+    out, seen = [], set()
+
+    def emit(col, constraint, params):
+        if (col, constraint) not in seen:
+            seen.add((col, constraint))
+            out.append((col, constraint, params))
+
+    def completeness_rules(col, n_nonnull):
+        if rows_total and n_nonnull == rows_total:
+            emit(col, "not_null", "")
+        elif n_nonnull and n_nonnull < rows_total:
+            pct = int((n_nonnull * 100) // rows_total)
+            if pct > 0:
+                emit(col, "completeness_pct_ge", str(pct))
+
+    def in_every_sidecar(key):
+        return sorted(set.intersection(*(set(sc.get(key, ()))
+                                         for sc in sides)))
+
+    for c in in_every_sidecar("cols"):
+        m = fold["cols"][c]
+        completeness_rules(c, m["n"])
+        if m["min"] is not None:
+            b = _range_bounds(float(m["min"]), float(m["max"]))
+            if b is not None:
+                emit(c, "range", f"[{_fmt_num(b[0])},{_fmt_num(b[1])}]")
+
+    for c in in_every_sidecar("mg"):
+        merged = MisraGries.deserialize(base64.b64decode(fold["mg"][c]))
+        completeness_rules(c, merged.n)
+        if merged.err == 0 and 0 < len(merged.counters) <= max_domain:
+            domain = sorted(str(v) for v in merged.counters)
+            if not any("," in v or v == "" for v in domain):
+                emit(c, "isin", ",".join(domain))
+
+    for c in in_every_sidecar("hll"):
+        n = fold["hll"][c]["n"]
+        completeness_rules(c, n)
+        est = base["hll"][c].get("union_distinct")
+        if n == rows_total and rows_total and est is not None and \
+                float(est) >= (1.0 - 3.0 * hll_rse) * rows_total:
+            emit(c, "unique", "approx")
+    return out
+
+
+def _sidecars_and_fold(spark, io, name: str) -> tuple:
+    """(sidecars of table ``name``, the fold of all but the latest run
+    against the latest): one read, one fold, one Spark job."""
+    from ..sources.tableio import fold_sidecars
+
+    sides = io.snapshot_stats(name)
+    if not sides:
+        raise ValueError(f"table {name} has no stats sidecars")
+    return sides, fold_sidecars(sides[:-1], spark, sides[-1])
+
+
 def suggest_from_sidecars(spark, io, name: str, max_domain: int = 10,
                           hll_rse: float = 0.016) -> DataFrame:
     """Constraint suggestion over a TableIO table WITHOUT scanning it:
@@ -299,86 +367,41 @@ def suggest_from_sidecars(spark, io, name: str, max_domain: int = 10,
     those commits are unknown — fail safe).  Constraints for a column
     appearing in several families are deduplicated.
     """
-    import base64
+    from ..functions.literals import literal_frame
 
-    from ..functions.sketches import MisraGries
+    return literal_frame(
+        spark, sidecar_suggestions(*_sidecars_and_fold(spark, io, name),
+                                   max_domain, hll_rse),
+        SUGGESTION_SCHEMA)
 
-    sidecars = io.snapshot_stats(name)
-    if not sidecars:
-        raise ValueError(f"table {name} has no stats sidecars")
-    rows_total = sum(sc["rows"] for sc in sidecars)
-    out, seen = [], set()
 
-    def emit(col, constraint, params):
-        if (col, constraint) not in seen:
-            seen.add((col, constraint))
-            out.append((col, constraint, params))
-
-    def completeness_rules(col, n_nonnull):
-        if rows_total and n_nonnull == rows_total:
-            emit(col, "not_null", "")
-        elif n_nonnull and n_nonnull < rows_total:
-            pct = int((n_nonnull * 100) // rows_total)
-            if pct > 0:
-                emit(col, "completeness_pct_ge", str(pct))
-
-    num_cols = set(sidecars[0].get("cols", ()))
-    for sc in sidecars[1:]:
-        num_cols &= set(sc.get("cols", ()))
-    for c in sorted(num_cols):
-        n = nulls = 0
-        mn = mx = None
-        for sc in sidecars:
-            cc = sc["cols"][c]
-            n += cc["n"]
-            nulls += cc["nulls"]
-            if cc["n"]:
-                mn = cc["min"] if mn is None else min(mn, cc["min"])
-                mx = cc["max"] if mx is None else max(mx, cc["max"])
-        completeness_rules(c, n)
-        if mn is not None:
-            b = _range_bounds(float(mn), float(mx))
-            if b is not None:
-                emit(c, "range", f"[{_fmt_num(b[0])},{_fmt_num(b[1])}]")
-
-    mg_cols = set(sidecars[0].get("mg", ()))
-    for sc in sidecars[1:]:
-        mg_cols &= set(sc.get("mg", ()))
-    for c in sorted(mg_cols):
-        merged = None
-        for sc in sidecars:
-            sk = MisraGries.deserialize(base64.b64decode(sc["mg"][c]))
-            merged = sk if merged is None else merged.merge(sk)
-        completeness_rules(c, merged.n)
-        if merged.err == 0 and 0 < len(merged.counters) <= max_domain:
-            domain = sorted(str(v) for v in merged.counters)
-            if not any("," in v or v == "" for v in domain):
-                emit(c, "isin", ",".join(domain))
-
-    hll_cols = set(sidecars[0].get("hll", ()))
-    for sc in sidecars[1:]:
-        hll_cols &= set(sc.get("hll", ()))
-    for c in sorted(hll_cols):
-        n = sum(sc["hll"][c]["n"] for sc in sidecars)
-        completeness_rules(c, n)
-        if n == rows_total and rows_total:
-            sk_rows = [(base64.b64decode(sc["hll"][c]["sketch"]),)
-                       for sc in sidecars]
-            est = (spark.createDataFrame(sk_rows, "sketch binary")
-                   .agg(F.expr(
-                       "hll_sketch_estimate(hll_union_agg(sketch, true))"))
-                   .collect()[0][0])
-            if est is not None and \
-                    float(est) >= (1.0 - 3.0 * hll_rse) * rows_total:
-                emit(c, "unique", "approx")
-    return spark.createDataFrame(out, SUGGESTION_SCHEMA)
+def contract_drift_rows(sides: list, base: dict, pinned,
+                        max_domain: int = 10) -> list:
+    """``sidecar_contract_drift``'s rows from the inputs of
+    ``sidecar_suggestions``."""
+    observed = sidecar_suggestions(sides, base, max_domain)
+    # the columns each constraint family can be observed on
+    seen = {k: {c for sc in sides for c in sc.get(k, ())}
+            for k in ("cols", "mg", "hll")}
+    family = {"range": seen["cols"], "isin": seen["mg"],
+              "unique": seen["hll"]}
+    family["not_null"] = family["completeness_pct_ge"] = \
+        set().union(*seen.values())
+    if isinstance(pinned, DataFrame):
+        pinned = pinned.collect()
+    pinned = [(r["column"], r["constraint"], r["params"])
+              if isinstance(r, dict) else (r[0], r[1], r[2])
+              for r in pinned]
+    pinned = [p for p in pinned if p[0] in family.get(p[1], ())]
+    return [d for d in diff_contracts(pinned, observed)
+            if d["change"] != "added"]
 
 
 def sidecar_contract_drift(spark, io, name: str, pinned,
                            max_domain: int = 10) -> list:
     """Constraint-level drift gate at COMMIT granularity with zero table
     scan: re-suggest from the table's commit sidecars
-    (``suggest_from_sidecars``) and diff against the pinned contract
+    (``sidecar_suggestions``) and diff against the pinned contract
     (``diff_contracts``).  Run it after every ``append`` beside the
     snapshot_diff gates — a loosened constraint (drift=True row) means
     the ingested history no longer supports what the pin promises, at
@@ -392,40 +415,8 @@ def sidecar_contract_drift(spark, io, name: str, pinned,
     committed sidecars is skipped rather than reported "removed" —
     absence of evidence, not drift.  "added" rows are dropped too (the
     pin's silence on a constraint is a decision, not a gap)."""
-    sidecars = io.snapshot_stats(name)
-    observed = suggest_from_sidecars(spark, io, name,
-                                     max_domain=max_domain)
-
-    def family_sets(key):
-        out = set()
-        for sc in sidecars:
-            out |= {(c, key) for c in sc.get(key, ())}
-        return out
-
-    num = {c for c, _ in family_sets("cols")}
-    mg = {c for c, _ in family_sets("mg")}
-    hll = {c for c, _ in family_sets("hll")}
-    completeness_ok = num | mg | hll
-
-    def observable(col, constraint):
-        if constraint in ("not_null", "completeness_pct_ge"):
-            return col in completeness_ok
-        if constraint == "range":
-            return col in num
-        if constraint == "isin":
-            return col in mg
-        if constraint == "unique":
-            return col in hll
-        return False
-
-    if isinstance(pinned, DataFrame):
-        pinned = pinned.collect()
-    pinned = [(r["column"], r["constraint"], r["params"])
-              if isinstance(r, dict) else (r[0], r[1], r[2])
-              for r in pinned]
-    pinned = [p for p in pinned if observable(p[0], p[1])]
-    return [d for d in diff_contracts(pinned, observed)
-            if d["change"] != "added"]
+    return contract_drift_rows(*_sidecars_and_fold(spark, io, name),
+                               pinned, max_domain)
 
 
 # -------------------------------------------------------------------------

@@ -10,9 +10,13 @@ report costs zero scans regardless of table size.  This is the reference's
 baseline-vs-incoming-window drift comparison
 (/root/reference/utils/StreamProcessor.py:143-157 recomputes both windows'
 stats per check) re-expressed as incremental metadata maintenance: the
-baseline is the fold of every prior commit's sidecar.
+baseline is the fold of every prior commit's sidecar
+(``tableio.fold_sidecars``).
 
-Two gates, both sidecar-only:
+Four gates, all sidecar-only, each a row-returning core (``*_rows``)
+under a literal-frame report.  Each compares the LATEST sidecar with the
+fold of the earlier sidecars that carry its family; a family the latest
+sidecar lacks yields no rows:
 - ``stat_drift_report`` — mean shift in baseline-stddev units (Cohen's-d
   style effect size) + null-rate jump + min/max range escapes, from the
   moment sidecars;
@@ -34,10 +38,16 @@ at every commit.
 
 from __future__ import annotations
 
+import base64
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as TT
+
+from ..functions.literals import literal_frame
+from ..functions.sketches import (KLL, MisraGries, kll_ks_distance,
+                                  kll_w1_distance)
+from ..sources.tableio import fold_sidecars
 
 REPORT_SCHEMA = TT.StructType([
     TT.StructField("column", TT.StringType()),
@@ -62,46 +72,38 @@ SCHEMA_DIFF_SCHEMA = TT.StructType([
 ])
 
 
-def _fold_col(sidecars: list, col: str) -> dict:
-    """Merge one column's moments across sidecars (same fold as
-    operators/stats.merge_moments, driver-side over O(commits) rows)."""
-    n = rows = nulls = s = ss = 0
-    mn = mx = None
-    for sc in sidecars:
-        c = sc["cols"][col]
-        rows += sc["rows"]
-        n += c["n"]
-        nulls += c["nulls"]
-        if c["n"]:
-            s += c["sum"]
-            ss += c["sumsq"]
-            mn = c["min"] if mn is None else min(mn, c["min"])
-            mx = c["max"] if mx is None else max(mx, c["max"])
-    mean = s / n if n else None
+def moments(m: dict) -> dict:
+    """One column's (folded) moment sidecar entry as n / mean / sample
+    stddev / min / max / null rate (a row counts in ``n`` or ``nulls``)."""
+    n, s, ss = m["n"], m["sum"] or 0, m["sumsq"] or 0
+    rows = n + m["nulls"]
     var = ((ss - s * s / n) / (n - 1)) if n > 1 else None
-    std = math.sqrt(var) if var is not None and var > 0 else 0.0
-    null_rate = nulls / rows if rows else None
-    return {"n": n, "mean": mean, "std": std, "min": mn, "max": mx,
-            "null_rate": null_rate}
+    return {"n": n, "mean": s / n if n else None,
+            "std": math.sqrt(var) if var is not None and var > 0 else 0.0,
+            "min": m["min"], "max": m["max"],
+            "null_rate": m["nulls"] / rows if rows else None}
 
 
-def stat_drift_report(spark: SparkSession, io, name: str,
-                      effect_threshold: float = 0.5,
-                      null_jump: float = 0.01,
-                      round_to: int = 6) -> DataFrame:
-    """Latest commit vs the fold of all earlier commits, one row per
-    profiled column.  Flags: |effect size| over threshold, null-rate jump,
-    or min/max escaping the historical range.  Empty if the table has
-    fewer than two stats-profiled commits."""
-    sidecars = io.snapshot_stats(name)
-    if len(sidecars) < 2:
-        return spark.createDataFrame([], REPORT_SCHEMA)
-    *before, after = sidecars
-    cols = [c for c in after["cols"] if all(c in sc["cols"] for sc in before)]
+def _report(spark: SparkSession, io, name: str, rows, schema,
+            hll: bool = False, **kw) -> DataFrame:
+    """``rows(fold of the earlier sidecars, latest sidecar, **kw)`` of
+    table ``name`` as a literal frame; ``hll`` runs the fold's one HLL
+    aggregation."""
+    sides = io.snapshot_stats(name)
+    return literal_frame(spark, rows(
+        fold_sidecars(sides[:-1], spark if hll else None, sides[-1]),
+        sides[-1], **kw) if len(sides) > 1 else [], schema)
+
+
+def stat_rows(base: dict, after: dict, effect_threshold: float = 0.5,
+              null_jump: float = 0.01, round_to: int = 6) -> list:
+    """The latest sidecar ``after`` vs the fold ``base`` of the earlier
+    ones, one row per profiled column.  Flags: |effect size| over
+    threshold, null-rate jump, or min/max escaping the historical
+    range."""
     out = []
-    for c in sorted(cols):
-        b = _fold_col(before, c)
-        a = _fold_col([after], c)
+    for c in sorted(set(after.get("cols", ())) & set(base.get("cols", ()))):
+        b, a = moments(base["cols"][c]), moments(after["cols"][c])
         if not b["n"] or not a["n"]:
             continue
         delta = a["mean"] - b["mean"]
@@ -113,14 +115,24 @@ def stat_drift_report(spark: SparkSession, io, name: str,
         null_delta = (a["null_rate"] or 0.0) - (b["null_rate"] or 0.0)
         flagged = (abs(effect) > effect_threshold
                    or null_delta > null_jump or escape)
-        out.append((c, b["n"], a["n"],
-                    round(b["mean"], round_to), round(a["mean"], round_to),
-                    round(b["std"], round_to),
-                    None if math.isinf(effect) else round(effect, round_to),
-                    round(b["null_rate"], round_to),
-                    round(a["null_rate"], round_to),
-                    escape, flagged))
-    return spark.createDataFrame(out, REPORT_SCHEMA)
+        out.append(Row(*REPORT_SCHEMA.names)(
+            c, b["n"], a["n"],
+            round(b["mean"], round_to), round(a["mean"], round_to),
+            round(b["std"], round_to),
+            None if math.isinf(effect) else round(effect, round_to),
+            round(b["null_rate"], round_to), round(a["null_rate"], round_to),
+            escape, flagged))
+    return out
+
+
+def stat_drift_report(spark: SparkSession, io, name: str,
+                      effect_threshold: float = 0.5,
+                      null_jump: float = 0.01,
+                      round_to: int = 6) -> DataFrame:
+    """``stat_rows`` of the table's latest commit."""
+    return _report(spark, io, name, stat_rows, REPORT_SCHEMA,
+                   effect_threshold=effect_threshold, null_jump=null_jump,
+                   round_to=round_to)
 
 
 QUANTILE_DRIFT_SCHEMA = TT.StructType([
@@ -135,42 +147,37 @@ QUANTILE_DRIFT_SCHEMA = TT.StructType([
 ])
 
 
-def quantile_drift_report(spark: SparkSession, io, name: str,
-                          ks_threshold: float = 0.15,
-                          round_to: int = 6) -> DataFrame:
-    """Shape drift between the latest commit and the fold of all earlier
-    commits, from the sidecars' KLL sketches alone: merged baseline sketch
-    vs the commit's sketch, KS statistic over their union support.  Catches
+def quantile_rows(base: dict, after: dict, ks_threshold: float = 0.15,
+                  round_to: int = 6) -> list:
+    """Shape drift between the latest sidecar and the fold of the earlier
+    ones, from their KLL sketches alone: merged baseline sketch vs the
+    commit's sketch, KS statistic over their union support.  Catches
     drifts the moment gate is blind to — a commit with the SAME mean but a
     different shape (bimodal split, variance blow-up) moves no effect size
     but moves the CDF.  Cost: O(commits × k) sketch bytes, zero scans."""
-    import base64
-
-    from ..functions.sketches import KLL, kll_ks_distance, kll_w1_distance
-
-    sidecars = [s for s in io.snapshot_stats(name) if s.get("kll")]
-    if len(sidecars) < 2:
-        return spark.createDataFrame([], QUANTILE_DRIFT_SCHEMA)
-    *before, after = sidecars
-    cols = [c for c in after["kll"]
-            if all(c in sc["kll"] for sc in before)]
     out = []
-    for c in sorted(cols):
-        base = None
-        for sc in before:
-            sk = KLL.deserialize(base64.b64decode(sc["kll"][c]))
-            base = sk if base is None else base.merge(sk)
+    for c in sorted(set(after.get("kll", ())) & set(base.get("kll", ()))):
+        b = KLL.deserialize(base64.b64decode(base["kll"][c]))
         cur = KLL.deserialize(base64.b64decode(after["kll"][c]))
-        if base.n == 0 or cur.n == 0:
+        if b.n == 0 or cur.n == 0:
             continue
-        ks = kll_ks_distance(base, cur)
-        out.append((c, base.n, cur.n,
-                    round(float(base.quantile(0.5)), round_to),
-                    round(float(cur.quantile(0.5)), round_to),
-                    round(ks, round_to),
-                    round(kll_w1_distance(base, cur), round_to),
-                    bool(ks > ks_threshold)))
-    return spark.createDataFrame(out, QUANTILE_DRIFT_SCHEMA)
+        ks = kll_ks_distance(b, cur)
+        out.append(Row(*QUANTILE_DRIFT_SCHEMA.names)(
+            c, b.n, cur.n,
+            round(float(b.quantile(0.5)), round_to),
+            round(float(cur.quantile(0.5)), round_to),
+            round(ks, round_to),
+            round(kll_w1_distance(b, cur), round_to),
+            bool(ks > ks_threshold)))
+    return out
+
+
+def quantile_drift_report(spark: SparkSession, io, name: str,
+                          ks_threshold: float = 0.15,
+                          round_to: int = 6) -> DataFrame:
+    """``quantile_rows`` of the table's latest commit."""
+    return _report(spark, io, name, quantile_rows, QUANTILE_DRIFT_SCHEMA,
+                   ks_threshold=ks_threshold, round_to=round_to)
 
 
 CATEGORY_DRIFT_SCHEMA = TT.StructType([
@@ -184,11 +191,10 @@ CATEGORY_DRIFT_SCHEMA = TT.StructType([
 ])
 
 
-def category_drift_report(spark: SparkSession, io, name: str,
-                          share_delta: float = 0.05, top: int = 8,
-                          round_to: int = 6) -> DataFrame:
-    """Heavy-hitter share drift between the latest commit and the merged
-    baseline, from the sidecars' Misra-Gries sketches: one row per item in
+def category_rows(base: dict, after: dict, share_delta: float = 0.05,
+                  top: int = 8, round_to: int = 6) -> list:
+    """Heavy-hitter share drift between the latest sidecar and the merged
+    baseline, from their Misra-Gries sketches: one row per item in
     either side's top-``top``, with its estimated share before/after.
     Flags a share swing beyond ``share_delta`` or a NEW ARRIVAL — an item
     the whole baseline never retained (e.g. an off-dimension codec first
@@ -198,36 +204,33 @@ def category_drift_report(spark: SparkSession, io, name: str,
     therefore a cheap commit-time complement to (not a replacement for)
     the exact broadcast referential check.  Cost: O(commits × k) sketch
     bytes, zero scans."""
-    import base64
-
-    from ..functions.sketches import MisraGries
-
-    sidecars = [s for s in io.snapshot_stats(name) if s.get("mg")]
-    if len(sidecars) < 2:
-        return spark.createDataFrame([], CATEGORY_DRIFT_SCHEMA)
-    *before, after = sidecars
-    cols = [c for c in after["mg"] if all(c in sc["mg"] for sc in before)]
     out = []
-    for c in sorted(cols):
-        base = None
-        for sc in before:
-            sk = MisraGries.deserialize(base64.b64decode(sc["mg"][c]))
-            base = sk if base is None else base.merge(sk)
+    for c in sorted(set(after.get("mg", ())) & set(base.get("mg", ()))):
+        b = MisraGries.deserialize(base64.b64decode(base["mg"][c]))
         cur = MisraGries.deserialize(base64.b64decode(after["mg"][c]))
-        if base.n == 0 or cur.n == 0:
+        if b.n == 0 or cur.n == 0:
             continue
-        items = sorted({i for i, _, _ in base.topk(top)}
+        items = sorted({i for i, _, _ in b.topk(top)}
                        | {i for i, _, _ in cur.topk(top)})
-        b_est = dict((i, e) for i, e, _ in base.topk())
+        b_est = dict((i, e) for i, e, _ in b.topk())
         a_est = dict((i, e) for i, e, _ in cur.topk())
         for item in items:
-            sb = b_est.get(item, 0) / base.n
+            sb = b_est.get(item, 0) / b.n
             sa = a_est.get(item, 0) / cur.n
             new = item not in b_est and sa > 0
-            flagged = abs(sa - sb) > share_delta or new
-            out.append((c, item, round(sb, round_to), round(sa, round_to),
-                        round(sa - sb, round_to), new, flagged))
-    return spark.createDataFrame(out, CATEGORY_DRIFT_SCHEMA)
+            out.append(Row(*CATEGORY_DRIFT_SCHEMA.names)(
+                c, item, round(sb, round_to), round(sa, round_to),
+                round(sa - sb, round_to), new,
+                abs(sa - sb) > share_delta or new))
+    return out
+
+
+def category_drift_report(spark: SparkSession, io, name: str,
+                          share_delta: float = 0.05, top: int = 8,
+                          round_to: int = 6) -> DataFrame:
+    """``category_rows`` of the table's latest commit."""
+    return _report(spark, io, name, category_rows, CATEGORY_DRIFT_SCHEMA,
+                   share_delta=share_delta, top=top, round_to=round_to)
 
 
 UNIQUENESS_DRIFT_SCHEMA = TT.StructType([
@@ -242,56 +245,46 @@ UNIQUENESS_DRIFT_SCHEMA = TT.StructType([
 ])
 
 
-def uniqueness_drift_report(spark: SparkSession, io, name: str,
-                            dup_rate_threshold: float = 0.05,
-                            round_to: int = 6) -> DataFrame:
-    """Cross-commit duplicate screen from the sidecars' HLL sketches: for
-    each key column, estimate how many of the latest commit's keys were
-    ALREADY ingested by earlier commits (inclusion-exclusion over the
-    merged baseline sketch, the commit's sketch, and their union — all
-    JVM-side ``hll_union_agg``), plus the commit's internal duplicate rate
+def uniqueness_rows(base: dict, after: dict,
+                    dup_rate_threshold: float = 0.05,
+                    round_to: int = 6) -> list:
+    """Cross-commit duplicate screen from the HLL estimates of a fold that
+    ran its aggregation against ``after`` (``fold_sidecars(before, spark,
+    after)``): for each key column, estimate how many of the latest
+    commit's keys were ALREADY ingested by earlier commits
+    (inclusion-exclusion over the merged baseline sketch, the commit's
+    sketch, and their union), plus the commit's internal duplicate rate
     (rows vs distinct).  This is the uniqueness check the reference runs
-    per window, lifted to commit-over-history granularity without touching
-    any ingested row again.  HLL lgK=12 → ~1.6% std err, so the default
-    threshold screens real re-ingestion, not sketch noise."""
-    import base64
-
-    sidecars = [s for s in io.snapshot_stats(name) if s.get("hll")]
-    if len(sidecars) < 2:
-        return spark.createDataFrame([], UNIQUENESS_DRIFT_SCHEMA)
-    *before, after = sidecars
-    cols = [c for c in after["hll"] if all(c in sc["hll"] for sc in before)]
+    per window, lifted to commit-over-history granularity without
+    touching any ingested row again.  HLL lgK=12 → ~1.6% std err, so the
+    default threshold screens real re-ingestion, not sketch noise."""
     out = []
-    for c in sorted(cols):
-        rows = [("base", base64.b64decode(sc["hll"][c]["sketch"]))
-                for sc in before]
-        rows.append(("after", base64.b64decode(after["hll"][c]["sketch"])))
-        est = (spark.createDataFrame(rows, "side string, sketch binary")
-               .agg(
-                   F.expr("hll_sketch_estimate(hll_union_agg(sketch, true))")
-                   .alias("union_d"),
-                   F.expr("hll_sketch_estimate(hll_union_agg("
-                          "CASE WHEN side = 'base' THEN sketch END, true))")
-                   .alias("base_d"),
-                   F.expr("hll_sketch_estimate(hll_union_agg("
-                          "CASE WHEN side = 'after' THEN sketch END, true))")
-                   .alias("after_d"))
-               .collect()[0])
-        n_after = after["hll"][c]["n"]
-        if not n_after or est.after_d is None:
+    for c in sorted(set(after.get("hll", ())) & set(base.get("hll", ()))):
+        h, n_after = base["hll"][c], after["hll"][c]["n"]
+        if h["distinct"] is None or not n_after:
             continue
         # hll_sketch_estimate returns BIGINT — lift to float for the report
-        base_d, after_d, union_d = (float(est.base_d), float(est.after_d),
-                                    float(est.union_d))
+        base_d, after_d, union_d = (float(h["distinct"]),
+                                    float(h["latest_distinct"]),
+                                    float(h["union_distinct"]))
         overlap = max(0.0, base_d + after_d - union_d)
         cross = overlap / after_d
         intra = max(0.0, 1.0 - after_d / n_after)
-        out.append((c, round(base_d, 1), n_after, round(after_d, 1),
-                    round(overlap, 1), round(cross, round_to),
-                    round(intra, round_to),
-                    bool(cross > dup_rate_threshold
-                         or intra > dup_rate_threshold)))
-    return spark.createDataFrame(out, UNIQUENESS_DRIFT_SCHEMA)
+        out.append(Row(*UNIQUENESS_DRIFT_SCHEMA.names)(
+            c, round(base_d, 1), n_after, round(after_d, 1),
+            round(overlap, 1), round(cross, round_to),
+            round(intra, round_to),
+            bool(cross > dup_rate_threshold or intra > dup_rate_threshold)))
+    return out
+
+
+def uniqueness_drift_report(spark: SparkSession, io, name: str,
+                            dup_rate_threshold: float = 0.05,
+                            round_to: int = 6) -> DataFrame:
+    """``uniqueness_rows`` of the table's latest commit."""
+    return _report(spark, io, name, uniqueness_rows,
+                   UNIQUENESS_DRIFT_SCHEMA, hll=True,
+                   dup_rate_threshold=dup_rate_threshold, round_to=round_to)
 
 
 def schema_diff_report(spark: SparkSession, io, name: str) -> DataFrame:
@@ -309,4 +302,4 @@ def schema_diff_report(spark: SparkSession, io, name: str) -> DataFrame:
         for c in sorted(set(ps) & set(cs)):
             if ps[c] != cs[c]:
                 out.append((cur["snap"], c, "type_changed", ps[c], cs[c]))
-    return spark.createDataFrame(out, SCHEMA_DIFF_SCHEMA)
+    return literal_frame(spark, out, SCHEMA_DIFF_SCHEMA)

@@ -1432,16 +1432,11 @@ def clips_audio_trim(spark, sf_dir):
 @register("clips_validation_verdicts")  # composite runner output: rows-only
 def clips_validation_verdicts(spark, sf_dir):
     """The flagship composite: full check-suite verdict matrix."""
-    from .operators import drift_dist, referential, stats, uniqueness
+    from .plans import suite
     d = G.ensure_fixtures(G.sf_label_from_dir(sf_dir))
     c = spark.read.parquet(f"{d}/clips")
     dim = spark.read.parquet(f"{d}/allowed_codecs.parquet")
-    st = stats.partition_column_stats(c)
-    return (stats.null_rate_verdicts(st)
-            .unionByName(stats.range_verdicts(st, "sr_hz", 8000, 48000))
-            .unionByName(uniqueness.uniqueness_verdicts(c))
-            .unionByName(referential.referential_verdicts(c, dim))
-            .unionByName(drift_dist.drift_verdicts(c)))
+    return suite.suite_verdicts(c, dim)
 
 
 @register("clips_partition_summaries", f"""
@@ -4430,8 +4425,9 @@ SELECT * FROM (
          CAST(count(DISTINCT transcript)
               + max(CASE WHEN transcript IS NULL THEN 1 ELSE 0 END)
               AS BIGINT) AS n_distinct_rhs,
-         list_slice(list_sort(array_agg(DISTINCT transcript)
-                              FILTER (transcript IS NOT NULL)), 1, 5)
+         array_to_string(list_slice(list_sort(
+             array_agg(DISTINCT transcript)
+             FILTER (transcript IS NOT NULL)), 1, 5), '|')
            AS rhs_sample
   FROM read_parquet('{CLIPS_SF001_GLOB}')
   GROUP BY part, clip_id)
@@ -4444,10 +4440,12 @@ def clips_fd_transcript(spark, sf_dir):
     clips_duplicate_violations (row counting) and
     clips_dup_transcript_wer (disagreement severity) don't state
     directly.  One map-side-combined groupBy on the key
-    (operators/stats.fd_violations)."""
+    (operators/stats.fd_violations); ``rhs_sample`` is one string so the
+    row holds primitives only."""
     from .operators.stats import fd_violations
     c = clips_df(spark, sf_dir).select("part", "clip_id", "transcript")
-    return fd_violations(c, ["part", "clip_id"], "transcript")
+    return (fd_violations(c, ["part", "clip_id"], "transcript")
+            .withColumn("rhs_sample", F.array_join("rhs_sample", "|")))
 
 
 def _benford_oracle() -> str:

@@ -21,12 +21,92 @@ already committed.
 
 from __future__ import annotations
 
+import base64
 import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
+
+from ..functions.literals import literal_frame
+
+
+def _merge_sketches(blobs) -> dict:
+    """{column: base64 merged sketch} of (column, sketch class, bytes)
+    items, merged left to right in the order given."""
+    merged: dict = {}
+    for c, cls, blob in blobs:
+        sk = cls.deserialize(blob)
+        merged[c] = merged[c].merge(sk) if c in merged else sk
+    return {c: base64.b64encode(sk.serialize()).decode()
+            for c, sk in merged.items()}
+
+
+def fold_sidecars(sides: list, spark: SparkSession = None,
+                  latest: dict = None) -> dict:
+    """Fold stats sidecars into ONE sidecar-shaped summary: moments add,
+    KLL and Misra-Gries sketches merge in commit order, HLL ``n`` counts
+    add; fold(baseline + kept) == fold(all).  With ``spark``, all HLL
+    sketches union in ONE ``hll_union_agg`` job: ``hll[c]`` gains the
+    ``sketch`` and its ``distinct`` estimate and, given the ``latest``
+    sidecar, ``latest_distinct`` and ``union_distinct`` (fold ∪ latest)."""
+    from ..functions.sketches import KLL, MisraGries
+
+    covers, moments, hll, tagged = [], {}, {}, []
+    for s in sides:
+        covers += list(s.get("covers", ())) or (
+            [s["snap"]] if s["snap"] != "_baseline" else [])
+        for c, m in s.get("cols", {}).items():
+            moments.setdefault(c, []).append(m)
+        for c, h in s.get("hll", {}).items():
+            hll.setdefault(c, {"n": 0})["n"] += h["n"]
+            tagged.append((c, False, h["sketch"]))
+    # an all-null commit's sums are None; its min/max are not extremes
+    cols = {c: {**{k: sum(m[k] or 0 for m in ms)
+                   for k in ("n", "nulls", "sum", "sumsq")},
+                "min": min((m["min"] for m in ms if m["n"]), default=None),
+                "max": max((m["max"] for m in ms if m["n"]), default=None)}
+            for c, ms in moments.items()}
+    tagged += [(c, True, h["sketch"])
+               for c, h in (latest or {}).get("hll", {}).items()]
+    if spark is not None and tagged:
+        def union(cond):        # NULL, not an empty sketch, over no rows
+            return (f"CASE WHEN count_if({cond}) > 0 THEN hll_union_agg("
+                    f"CASE WHEN {cond} THEN sketch END, true) END")
+
+        est = (literal_frame(spark, tagged, T.StructType.fromDDL(
+                   "col string, latest boolean, sketch string"))
+               .withColumn("sketch", F.unbase64("sketch"))
+               .groupBy("col")
+               .agg(F.expr(union("NOT latest")).alias("sketch"),
+                    F.expr(f"hll_sketch_estimate({union('latest')})")
+                    .alias("latest_distinct"),
+                    F.expr(f"hll_sketch_estimate({union('true')})")
+                    .alias("union_distinct"))
+               .withColumn("distinct", F.expr("hll_sketch_estimate(sketch)")))
+        keys = ["distinct"] + (["latest_distinct", "union_distinct"]
+                               if latest is not None else [])
+        for r in est.collect():
+            h = hll.setdefault(r["col"], {"n": 0})
+            h["sketch"] = r["sketch"] and base64.b64encode(
+                bytes(r["sketch"])).decode()
+            h.update((k, r[k]) for k in keys)
+    return {
+        "baseline": True,
+        "snap": "_baseline",
+        "covers": covers,
+        "rows": sum(s["rows"] for s in sides),
+        "cols": cols,
+        "kll": _merge_sketches((c, KLL, base64.b64decode(b)) for s in sides
+                               for c, b in s.get("kll", {}).items()),
+        "mg": _merge_sketches((c, MisraGries, base64.b64decode(b))
+                              for s in sides
+                              for c, b in s.get("mg", {}).items()),
+        "hll": hll,
+        "schema": sides[-1].get("schema", {}) if sides else {},
+    }
 
 
 class ParquetTableIO:
@@ -164,8 +244,6 @@ class ParquetTableIO:
     def _commit_snapshot_stats(self, snap_df: DataFrame, name: str,
                                snap: str, cols, cat_cols=(),
                                key_cols=()) -> None:
-        import base64
-
         aggs = [F.count(F.lit(1)).alias("_rows")]
         for c in cols:
             v = F.col(c).cast("bigint")
@@ -272,8 +350,6 @@ class ParquetTableIO:
         merge driver-side.  The mergeable-summary shape that lets
         commit-time quantile/category drift run without ever rescanning
         history.  Returns ({col: b64_kll}, {col: b64_mg})."""
-        import base64
-
         import numpy as np
 
         from ..functions.sketches import KLL, MisraGries
@@ -299,14 +375,11 @@ class ParquetTableIO:
                 "col": nums + cats,
                 "blob": [sks[c].serialize() for c in nums + cats]})
 
-        merged = {}
-        for r in (snap_df.select(*nums, *cats)
-                  .mapInPandas(build, "col string, blob binary").collect()):
-            cls = KLL if r.col in nums else MisraGries
-            sk = cls.deserialize(bytes(r.blob))
-            merged[r.col] = sk if r.col not in merged else merged[r.col].merge(sk)
-        enc = {c: base64.b64encode(sk.serialize()).decode()
-               for c, sk in merged.items()}
+        enc = _merge_sketches(
+            (r.col, KLL if r.col in nums else MisraGries, bytes(r.blob))
+            for r in (snap_df.select(*nums, *cats)
+                      .mapInPandas(build, "col string, blob binary")
+                      .collect()))
         return ({c: enc[c] for c in nums if c in enc},
                 {c: enc[c] for c in cats if c in enc})
 
@@ -338,82 +411,18 @@ class ParquetTableIO:
     def compact_stats(self, spark: SparkSession, name: str,
                       keep_last: int = 8) -> int:
         """Fold all but the newest ``keep_last`` sidecars into ONE baseline
-        sidecar and delete the folded files — bounding gate metadata at any
-        commit count.  Sound because every sidecar summary is mergeable:
-        moments add, KLL and Misra-Gries merge, HLL unions (JVM-side).
-        Re-compaction folds the existing baseline in again.  Returns the
-        number of sidecars folded.  Trade-off (documented contract): a
-        rollback INTO the compacted range loses per-commit stats history —
-        rollback() deletes a baseline that covers any retired snapshot, and
-        the gates resume fresh from the surviving per-commit sidecars."""
-        import base64
-
+        sidecar (``fold_sidecars``, one Spark job) and delete the folded
+        files — bounding gate metadata at any commit count.  Re-compaction
+        folds the existing baseline in again.  Returns the number of
+        sidecars folded.  Trade-off (documented contract): a rollback INTO
+        the compacted range loses per-commit stats history — rollback()
+        deletes a baseline that covers any retired snapshot, and the gates
+        resume fresh from the surviving per-commit sidecars."""
         sides = self.snapshot_stats(name)
-        fold, keep = sides[:-keep_last] if keep_last else sides, \
-            sides[-keep_last:] if keep_last else []
+        fold = sides[:-keep_last] if keep_last else sides
         if len(fold) < 2:
             return 0
-        from ..functions.sketches import KLL, MisraGries
-
-        rows_total = sum(s["rows"] for s in fold)
-        covers = []
-        for s in fold:
-            covers += list(s.get("covers", ())) or (
-                [s["snap"]] if s["snap"] != "_baseline" else [])
-        cols: dict = {}
-        for s in fold:
-            for c, m in s.get("cols", {}).items():
-                t = cols.setdefault(c, {"n": 0, "nulls": 0, "sum": 0,
-                                        "sumsq": 0, "min": None, "max": None})
-                t["n"] += m["n"]
-                t["nulls"] += m["nulls"]
-                t["sum"] += m["sum"] or 0       # all-null commit -> sum None
-                t["sumsq"] += m["sumsq"] or 0
-                if m["n"]:
-                    t["min"] = m["min"] if t["min"] is None \
-                        else min(t["min"], m["min"])
-                    t["max"] = m["max"] if t["max"] is None \
-                        else max(t["max"], m["max"])
-
-        def _merge_b64(kind, cls):
-            merged: dict = {}
-            for s in fold:
-                for c, b in s.get(kind, {}).items():
-                    sk = cls.deserialize(base64.b64decode(b))
-                    merged[c] = sk if c not in merged \
-                        else merged[c].merge(sk)
-            return {c: base64.b64encode(sk.serialize()).decode()
-                    for c, sk in merged.items()}
-
-        hll: dict = {}
-        hll_cols = {c for s in fold for c in s.get("hll", {})}
-        if hll_cols:
-            # ONE job for every key column: tag blobs and group-union
-            blobs = [(c, base64.b64decode(s["hll"][c]["sketch"]))
-                     for c in hll_cols
-                     for s in fold if c in s.get("hll", {})]
-            unions = (spark.createDataFrame(
-                blobs, "col string, sketch binary")
-                .groupBy("col")
-                .agg(F.expr("hll_union_agg(sketch, true)").alias("u"))
-                .collect())
-            for r in unions:
-                hll[r["col"]] = {
-                    "n": sum(s["hll"][r["col"]]["n"] for s in fold
-                             if r["col"] in s.get("hll", {})),
-                    "sketch": base64.b64encode(bytes(r["u"])).decode()}
-
-        payload = {
-            "baseline": True,
-            "snap": "_baseline",
-            "covers": covers,
-            "rows": rows_total,
-            "cols": cols,
-            "kll": _merge_b64("kll", KLL),
-            "mg": _merge_b64("mg", MisraGries),
-            "hll": hll,
-            "schema": fold[-1].get("schema", {}),
-        }
+        payload = fold_sidecars(fold, spark)
         dest = self._stats_path(name, "_baseline")
         tmp = dest + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
+from ..functions.literals import literal_frame
 from ..plans import suite
 
 CLIPS_STREAM_SCHEMA = StructType([
@@ -121,6 +122,39 @@ def contract_stream(spark: SparkSession, clips_dir: str, contract,
 
 GATE_TABLE = "stream_ingest"
 GATE_SCOPE = "stream_gate_epochs"
+GATE_SCHEMA = "gate string, subject string, detail string, flagged boolean"
+
+
+def gate_rows(spark: SparkSession, sides: list,
+              pinned_contract=None) -> list:
+    """The latest of ``sides`` gated as (gate, subject, detail, flagged)
+    rows by the four snapshot_diff reports and, with ``pinned_contract``,
+    the contract gate: one fold, one Spark job (its HLL aggregation)."""
+    from ..operators import profile, snapshot_diff as SD
+    from ..sources.tableio import fold_sidecars
+
+    *before, after = sides
+    # a first commit folds an empty baseline: the reports give no rows
+    base = fold_sidecars(before, spark, after)
+    rows = [("moments", r.column,
+             f"effect={r.effect_size} escape={r.range_escape}", r.flagged)
+            for r in SD.stat_rows(base, after)]
+    rows += [("quantile", r.column, f"ks={r.ks}", r.flagged)
+             for r in SD.quantile_rows(base, after)]
+    rows += [("category", f"{r.column}={r.item}",
+              f"delta={r.delta} new={r.new_arrival}", r.flagged)
+             for r in SD.category_rows(base, after)]
+    rows += [("uniqueness", r.column,
+              f"cross={r.cross_dup_rate} intra={r.intra_dup_rate}",
+              r.flagged)
+             for r in SD.uniqueness_rows(base, after)]
+    if pinned_contract is not None:
+        rows += [("contract", f"{d['column']}.{d['constraint']}",
+                  f"{d['change']}: {d['before']} -> {d['after']}",
+                  d["drift"])
+                 for d in profile.contract_drift_rows(sides, base,
+                                                      pinned_contract)]
+    return rows
 
 
 def validate_stream_with_gate(spark: SparkSession, clips_dir: str,
@@ -176,7 +210,6 @@ def validate_stream_with_gate(spark: SparkSession, clips_dir: str,
     drift (bandwidth collapse, tone/noise balance shifts, upsampled
     batches) between epochs with zero new gate code and zero audio
     re-reads."""
-    from ..operators import snapshot_diff
     from ..sources.tableio import ParquetTableIO
 
     dim = spark.read.parquet(dim_path)
@@ -219,40 +252,12 @@ def validate_stream_with_gate(spark: SparkSession, clips_dir: str,
                 cat_cols=("codec",), key_cols=("clip_id",))
             io.commit_manifest_row(GATE_SCOPE, int(epoch_id),
                                    {"snap": snap})
-        rows = []
-        for r in snapshot_diff.stat_drift_report(
-                spark, io, GATE_TABLE).collect():
-            rows.append(("moments", r.column,
-                         f"effect={r.effect_size} escape={r.range_escape}",
-                         bool(r.flagged)))
-        for r in snapshot_diff.quantile_drift_report(
-                spark, io, GATE_TABLE).collect():
-            rows.append(("quantile", r.column, f"ks={r.ks}",
-                         bool(r.flagged)))
-        for r in snapshot_diff.category_drift_report(
-                spark, io, GATE_TABLE).collect():
-            rows.append(("category", f"{r.column}={r.item}",
-                         f"delta={r.delta} new={r.new_arrival}",
-                         bool(r.flagged)))
-        for r in snapshot_diff.uniqueness_drift_report(
-                spark, io, GATE_TABLE).collect():
-            rows.append(("uniqueness", r.column,
-                         f"cross={r.cross_dup_rate} intra={r.intra_dup_rate}",
-                         bool(r.flagged)))
-        if pinned_contract is not None:
-            from ..operators import profile as PR
-            for d in PR.sidecar_contract_drift(
-                    spark, io, GATE_TABLE, pinned_contract):
-                rows.append((
-                    "contract", f"{d['column']}.{d['constraint']}",
-                    f"{d['change']}: {d['before']} -> {d['after']}",
-                    bool(d["drift"])))
-        gates = spark.createDataFrame(
-            rows, "gate string, subject string, detail string, "
-                  "flagged boolean")
-        _write_epoch(gates, epoch_id, out_dir + "_gates")
-        if compact_after and \
-                len(io.snapshot_stats(GATE_TABLE)) > compact_after:
+        sides = io.snapshot_stats(GATE_TABLE)
+        _write_epoch(literal_frame(spark, gate_rows(spark, sides,
+                                                    pinned_contract),
+                                   StructType.fromDDL(GATE_SCHEMA)),
+                     epoch_id, out_dir + "_gates")
+        if compact_after and len(sides) > compact_after:
             io.compact_stats(spark, GATE_TABLE, keep_last=compact_keep)
 
     return _start(stream, handle, checkpoint_dir, available_now)

@@ -362,6 +362,21 @@ def test_fused_suite_equals_lazy_suite_on_fixture(spark, clips,
         clips, allowed_codecs)) == want
 
 
+def test_flagship_query_runs_the_production_suite(spark, clips,
+                                                  allowed_codecs,
+                                                  fixture_dir):
+    """The registry's flagship ``clips_validation_verdicts`` is the fused
+    suite, and its rows still equal the lazy union it used to build."""
+    from drift_detection_pibic___framework_spark import queries as Q
+
+    got = Q.QUERIES["clips_validation_verdicts"](spark, fixture_dir)
+    # finalized in Python: a literal frame, not a lazy plan that would
+    # scan the table again
+    assert "FileScan" not in _plan(got)
+    assert _verdict_rows(got) == \
+        _verdict_rows(_lazy_suite_verdicts(clips, allowed_codecs))
+
+
 def test_fused_suite_equals_lazy_suite_on_edge_inputs(spark, clips,
                                                       allowed_codecs):
     from drift_detection_pibic___framework_spark.plans import suite

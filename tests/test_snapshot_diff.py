@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from drift_detection_pibic___framework_spark.operators import snapshot_diff
 from drift_detection_pibic___framework_spark.sources.tableio import (
-    ParquetTableIO)
+    ParquetTableIO, fold_sidecars)
 
 
 @pytest.fixture()
@@ -34,7 +34,7 @@ def test_sidecar_written_and_fold_matches_direct(spark, io):
     _commit(spark, io, "t", 60, 50)
     sides = io.snapshot_stats("t")
     assert len(sides) == 2 and sides[0]["rows"] == 100
-    folded = snapshot_diff._fold_col(sides, "v")
+    folded = snapshot_diff.moments(fold_sidecars(sides)["cols"]["v"])
     direct = (io.read_appended(spark, "t")
               .agg(F.avg("v").alias("m"), F.stddev_samp("v").alias("s"),
                    F.min("v").alias("mn"), F.max("v").alias("mx"))
@@ -248,11 +248,12 @@ def _commit_keyed(spark, io, name, n, start, dup_from=None):
 def test_compact_stats_fold_matches_uncompacted(spark, io):
     for m in (50, 50, 50, 50):
         _commit(spark, io, "t", 100, m)
-    before = snapshot_diff._fold_col(io.snapshot_stats("t")[:-1], "v")
+    before = snapshot_diff.moments(
+        fold_sidecars(io.snapshot_stats("t")[:-1])["cols"]["v"])
     assert io.compact_stats(spark, "t", keep_last=1) == 3
     sides = io.snapshot_stats("t")
     assert [s["snap"] for s in sides][0] == "_baseline" and len(sides) == 2
-    after = snapshot_diff._fold_col(sides[:-1], "v")
+    after = snapshot_diff.moments(fold_sidecars(sides[:-1])["cols"]["v"])
     for k in ("n", "mean", "std", "min", "max", "null_rate"):
         assert after[k] == pytest.approx(before[k], abs=1e-12), k
     # the drift gate reads straight through the baseline
@@ -330,3 +331,132 @@ def test_kll_w1_distance_matches_exact_w1():
     # degenerate: single-point sketches at the same value
     assert kll_w1_distance(kll_from_values(np.array([3.0])),
                            kll_from_values(np.array([3.0]))) == 0.0
+
+
+# -- which commits each gate compares --------------------------------------
+
+def _stats_key_commit(spark, io, name, start, n=200, mean=50,
+                      key_only=False):
+    """Keys [start, start+n) with v ~ [mean-2, mean+2]; stats + key
+    sidecars, or the key sidecar alone."""
+    df = spark.range(start, start + n).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        (F.lit(mean) + F.pmod(F.col("id"), F.lit(5)) - 2)
+        .cast("int").alias("v"))
+    if key_only:
+        return io.append(df.select("key"), name, key_cols=("key",))
+    return io.append(df, name, stats_cols=("v",), key_cols=("key",))
+
+
+def test_moment_gate_sees_past_a_key_only_commit(spark, io):
+    """A key-only commit in history must not blind the moment gate: the
+    baseline is the earlier sidecars that carry moments."""
+    for i in range(3):
+        _stats_key_commit(spark, io, "t", 200 * i)
+    _stats_key_commit(spark, io, "t", 600, key_only=True)
+    _stats_key_commit(spark, io, "t", 800, mean=5050)
+    rows = snapshot_diff.stat_drift_report(spark, io, "t").collect()
+    assert [r.column for r in rows] == ["v"]
+    assert rows[0].flagged and rows[0].effect_size > 0.5
+    assert rows[0].n_before == 600 and rows[0].n_after == 200
+    q = snapshot_diff.quantile_drift_report(spark, io, "t").collect()
+    assert q[0].flagged and q[0].ks == 1.0
+
+
+def test_sketch_gates_skip_a_key_only_latest_commit(spark, io):
+    """A family the latest sidecar lacks yields no rows: a key-only
+    latest commit is not gated on moments or quantiles by re-comparing
+    the commit before it, and its uniqueness row is its own."""
+    for i in range(3):
+        _stats_key_commit(spark, io, "t", 200 * i)
+    _stats_key_commit(spark, io, "t", 600, n=150, key_only=True)
+    assert snapshot_diff.quantile_drift_report(spark, io, "t").count() == 0
+    assert snapshot_diff.stat_drift_report(spark, io, "t").count() == 0
+    u = snapshot_diff.uniqueness_drift_report(spark, io, "t").collect()
+    assert [(r.column, r.commit_rows) for r in u] == [("key", 150)]
+
+
+# -- one fold against the former report bodies -----------------------------
+
+def _family_commit(spark, io, name, start, n=300, shift=0,
+                   codecs=("mp3", "wav"), nulls=0):
+    """Keys [start, start+n) with every sidecar family: v (with ``nulls``
+    of every 50 rows null) shifted by ``shift``, codec cycling over
+    ``codecs``."""
+    df = spark.range(start, start + n).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        F.when(F.pmod(F.col("id"), F.lit(50)) < nulls, None)
+        .otherwise(F.pmod(F.col("id"), F.lit(7)) + 50 + shift)
+        .cast("int").alias("v"),
+        F.element_at(F.array(*map(F.lit, codecs)),
+                     (F.pmod(F.col("id"), F.lit(len(codecs))) + 1)
+                     .cast("int")).alias("codec"))
+    io.append(df, name, stats_cols=("v",), cat_cols=("codec",),
+              key_cols=("key",))
+    return df
+
+
+def _same_frames(a, b):
+    assert a.schema == b.schema
+    assert a.collect() == b.collect()
+
+
+def test_reports_equal_former_bodies_before_and_after_compaction(spark, io):
+    import snapshot_diff_oracle as O
+
+    from drift_detection_pibic___framework_spark.operators import (
+        profile as P)
+    from drift_detection_pibic___framework_spark.streaming import (
+        stream_validate)
+
+    first = _family_commit(spark, io, "t", 0)
+    for start, kw in ((300, {}), (600, {}), (900, {"nulls": 2}),
+                      (1000, {"shift": 3,
+                              "codecs": ("mp3", "wav", "opus")}),
+                      (1300, {"shift": 10})):
+        _family_commit(spark, io, "t", start, **kw)
+    pinned = [(r.column, r.constraint, r.params) for r in
+              P.suggest_constraints(first, exact_distinct=True).collect()]
+    reports = ("stat_drift_report", "quantile_drift_report",
+               "category_drift_report", "uniqueness_drift_report")
+    for compacted in (False, True):
+        if compacted:
+            assert io.compact_stats(spark, "t", keep_last=2) == 4
+        for rep in reports:
+            _same_frames(getattr(snapshot_diff, rep)(spark, io, "t"),
+                         getattr(O, rep)(spark, io, "t"))
+        _same_frames(P.suggest_from_sidecars(spark, io, "t"),
+                     O.suggest_from_sidecars(spark, io, "t"))
+        assert P.sidecar_contract_drift(spark, io, "t", pinned) == \
+            O.sidecar_contract_drift(spark, io, "t", pinned)
+        got = stream_validate.gate_rows(spark, io.snapshot_stats("t"),
+                                        pinned)
+        assert got == O.gate_rows(spark, io, "t", pinned)
+        assert {g for g, _, _, f in got if f} == \
+            {"moments", "quantile", "category", "contract"}
+
+
+def test_gate_rows_run_one_spark_job(spark, io):
+    """The four reports plus the contract gate of one commit: one fold,
+    one Spark job (the HLL aggregation of every key column)."""
+    import uuid
+
+    from drift_detection_pibic___framework_spark.streaming import (
+        stream_validate)
+
+    for i in range(6):
+        _family_commit(spark, io, "t", 250 * i, shift=5 * (i == 5))
+    sides = io.snapshot_stats("t")
+    pinned = [("v", "range", "[48,56]"), ("codec", "isin", "mp3,wav"),
+              ("key", "unique", "")]
+    sc = spark.sparkContext
+    group = f"gate-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = stream_validate.gate_rows(spark, sides, pinned)
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    assert {g for g, _, _, _ in rows} == \
+        {"moments", "quantile", "category", "uniqueness", "contract"}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
