@@ -6,6 +6,12 @@ with ``jround`` and ``jstr``, which reproduce Spark's ``round(double, n)``
 and ``CAST(double AS STRING)``, so their rows equal the ones a Spark
 expression would build.  ``literal_frame`` hands such rows back as a
 DataFrame without a Spark job.
+
+``sql_lit`` and ``sql_ident`` write values and column names into SQL text.
+Fixed sets of expressions (the suite's aggregates and breach predicates)
+are built as SQL text and parsed in one JVM call each: every PySpark
+``Column`` call first records its Python call site in the JVM, several
+py4j round trips per call.
 """
 
 from __future__ import annotations
@@ -42,8 +48,10 @@ def jstr(x):
     return f"{'-' if sign else ''}{ds[0]}.{ds[1:] or '0'}E{exp + len(ds) - 1}"
 
 
-def _sql(x) -> str:
-    """``x`` as a Spark SQL literal of the type ``F.lit(x)`` gives it."""
+def sql_lit(x) -> str:
+    """``x`` as a Spark SQL literal of the type ``F.lit(x)`` gives it: a
+    float is a ``D``-suffixed double, since a bare ``0.5`` parses as a
+    decimal."""
     if x is None:
         return "NULL"
     if isinstance(x, bool):
@@ -58,6 +66,11 @@ def _sql(x) -> str:
     raise TypeError(f"no SQL literal for {type(x).__name__}: {x!r}")
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a back-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def literal_frame(spark: SparkSession, rows: list,
                   schema: StructType) -> DataFrame:
     """``rows`` (tuples in ``schema`` order) as a one-partition DataFrame
@@ -68,6 +81,6 @@ def literal_frame(spark: SparkSession, rows: list,
     collecting it runs a job, starts a Python worker per task and writes
     one file per task."""
     arr = F.expr("array(" + ", ".join(
-        "struct(" + ", ".join(map(_sql, r)) + ")" for r in rows) + ")")
+        "struct(" + ", ".join(map(sql_lit, r)) + ")" for r in rows) + ")")
     return (spark.range(0, 1, 1, 1)
             .select(F.inline(arr.cast(ArrayType(schema, not rows)))))

@@ -38,25 +38,32 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType)
 
-from ..functions.literals import jround, jstr, literal_frame
+from ..functions.literals import (jround, jstr, literal_frame, sql_ident,
+                                  sql_lit)
 
 DEFAULT_BASELINE_PARTS = (0, 1, 2, 3)
 EPS = 1e-6
+
+
+def _bin_sql(col: str, width: float, n_bins: int) -> str:
+    return (f"CAST(least(greatest(floor({sql_ident(col)} / {sql_lit(width)}),"
+            f" 0), {n_bins - 1}) AS INT)")
 
 
 def bin_index(col: str, width: float, n_bins: int) -> Column:
     """The equal-width bin of ``col``, clamped to [0, n_bins-1].  A null
     value lands in bin 0 (``greatest`` skips nulls), so every row of a
     partition is counted in its histogram."""
-    return F.least(F.greatest(F.floor(F.col(col) / F.lit(width)), F.lit(0)),
-                   F.lit(n_bins - 1)).cast("int")
+    return F.expr(_bin_sql(col, width, n_bins))
 
 
-def bin_aggs(col: str, width: float = 100.0, n_bins: int = 40) -> Column:
-    """The histogram of ``col`` as one aggregate column: an array of
-    ``n_bins`` ``count_if`` counts, so it rides any ``groupBy(part)``."""
-    b = bin_index(col, width, n_bins)
-    return F.array(*[F.count_if(b == i) for i in range(n_bins)])
+def bin_aggs(col: str, width: float = 100.0, n_bins: int = 40) -> str:
+    """The histogram of ``col`` as one aggregate in SQL text: an array of
+    ``n_bins`` ``count_if`` counts of ``bin_index``, so it rides any
+    ``groupBy(part)`` and parses in one call."""
+    b = _bin_sql(col, width, n_bins)
+    return ("array(" + ", ".join(f"count_if({b} = {i})"
+                                 for i in range(n_bins)) + ")")
 
 
 def bin_count_plan(df: DataFrame, col: str = "dur_ms", width: float = 100.0,
@@ -65,7 +72,8 @@ def bin_count_plan(df: DataFrame, col: str = "dur_ms", width: float = 100.0,
     given."""
     if parts is not None:
         df = df.filter(F.col("part").isin(list(parts)))
-    return df.groupBy("part").agg(bin_aggs(col, width, n_bins).alias("bins"))
+    return df.groupBy("part").agg(
+        F.expr(bin_aggs(col, width, n_bins) + " AS bins"))
 
 
 def bin_counts(df: DataFrame, col: str = "dur_ms", width: float = 100.0,

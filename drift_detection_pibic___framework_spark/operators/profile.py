@@ -590,27 +590,7 @@ def suggested_suite_violations(df: DataFrame, suggestions,
     ``suggested_suite_verdicts``, exactly like dist_drift in the
     hand-written suite (plans/suite.py)."""
     from ..plans import suite
-    null_s = F.lit(None).cast("string")
-
-    def viol(name, bad, observed, expected):
-        return F.when(bad, F.struct(
-            F.lit(name).alias("check_name"),
-            observed.cast("string").alias("observed"),
-            F.lit(expected).alias("expected"))).otherwise(
-                F.lit(None).cast(
-                    "struct<check_name:string,observed:string,"
-                    "expected:string>"))
-
-    structs = [viol(c.name, *c.breach)
-               for c in suite.contract_checks(suggestions) if c.breach]
-    if not structs:
-        return (df.select(F.col(id_col), F.col(part_col)).limit(0)
-                .select(id_col, F.lit("").alias("check_name"),
-                        null_s.alias("observed"), null_s.alias("expected"),
-                        part_col))
-    return (df.select(
-        F.col(id_col), F.col(part_col),
-        F.explode(F.filter(F.array(*structs),
-                           lambda v: v.isNotNull())).alias("v"))
-        .select(id_col, "v.check_name", "v.observed", "v.expected",
-                part_col))
+    return (suite.explode_breaches(
+        df, [(c.name, *c.breach) for c in suite.contract_checks(suggestions)
+             if c.breach], (id_col, part_col))
+        .select(id_col, "check_name", "observed", "expected", part_col))

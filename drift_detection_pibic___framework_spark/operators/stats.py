@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.literals import sql_ident, sql_lit
+
 # columns the stats pass profiles, per north_rule
 NUMERIC_COLS = ("sr_hz", "dur_ms")
 NULLABLE_COLS = ("transcript", "clip_id", "codec")
@@ -39,47 +41,49 @@ def partition_column_stats(clips: DataFrame,
     """One row per partition: count + per-column null-rate/mean/stddev/min/
     max/approx-quantiles. Single agg — single shuffle, map-side partials.
 
-    ``extra_aggs`` ({name: aggregate column}) ride the same aggregation
+    ``extra_aggs`` ({name: aggregate SQL text}) ride the same aggregation
     and follow the stats columns in the output: the fused check suite
     (plans/suite.py) adds its per-check counts this way.
+
+    Every aggregate is SQL text parsed in one call (``F.expr``), and the
+    output projection is one ``selectExpr``: built from ``Column`` calls,
+    the fused suite's pass 1 took about fifteen times the py4j round
+    trips.
 
     All quantiles of a column come from ONE percentile_approx sketch
     evaluated at every probability (optimization round): one GK digest
     per column instead of one per (column, quantile) — a fifth of the
     sketch build/merge work for identical values (the digest is built
     from the same inputs in the same order either way)."""
-    aggs = [F.count(F.lit(1)).alias("row_count")]
-    qlist = list(quantiles)
+    aggs = {"row_count": "count(1)"}
+    probs = ", ".join(map(sql_lit, quantiles))
     for c in numeric_cols:
-        aggs += [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}_nulls"),
-            F.round(F.avg(c), round_to).alias(f"{c}_mean"),
-            F.round(F.stddev_samp(c), round_to).alias(f"{c}_stddev"),
-            F.min(c).alias(f"{c}_min"),
-            F.max(c).alias(f"{c}_max"),
-        ]
-        if qlist:
-            aggs.append(
-                F.percentile_approx(
-                    c, F.array(*[F.lit(q) for q in qlist]), F.lit(10000))
-                .alias(f"_q_{c}"))
+        q = sql_ident(c)
+        aggs[f"{c}_nulls"] = f"sum(CASE WHEN {q} IS NULL THEN 1 ELSE 0 END)"
+        aggs[f"{c}_mean"] = f"round(avg({q}), {round_to})"
+        aggs[f"{c}_stddev"] = f"round(stddev_samp({q}), {round_to})"
+        aggs[f"{c}_min"] = f"min({q})"
+        aggs[f"{c}_max"] = f"max({q})"
+        if quantiles:
+            aggs[f"_q_{c}"] = f"percentile_approx({q}, array({probs}), 10000)"
     for c in nullable_cols:
-        aggs.append(
-            F.round(F.avg(F.when(F.col(c).isNull(), 1.0).otherwise(0.0)),
-                    round_to).alias(f"{c}_null_rate"))
+        aggs[f"{c}_null_rate"] = (
+            f"round(avg(CASE WHEN {sql_ident(c)} IS NULL THEN 1.0D "
+            f"ELSE 0.0D END), {round_to})")
     extra = extra_aggs or {}
-    aggs += [c.alias(n) for n, c in extra.items()]
-    g = clips.groupBy("part").agg(*aggs)
-    sel = [F.col("part"), F.col("row_count")]
+    aggs.update(extra)
+    g = clips.groupBy("part").agg(*[F.expr(f"{e} AS {sql_ident(n)}")
+                                    for n, e in aggs.items()])
+    sel = ["part", "row_count"]
     for c in numeric_cols:
-        sel += [F.col(f"{c}_nulls"), F.col(f"{c}_mean"),
-                F.col(f"{c}_stddev"), F.col(f"{c}_min"), F.col(f"{c}_max")]
-        sel += [F.element_at(F.col(f"_q_{c}"), i + 1)
-                .alias(f"{c}_p{int(q * 100)}")
-                for i, q in enumerate(qlist)]
-    sel += [F.col(f"{c}_null_rate") for c in nullable_cols]
-    sel += [F.col(n) for n in extra]
-    return g.select(*sel)
+        sel += [sql_ident(f"{c}_{s}")
+                for s in ("nulls", "mean", "stddev", "min", "max")]
+        sel += [f"element_at({sql_ident('_q_' + c)}, {i + 1}) AS "
+                + sql_ident(f"{c}_p{int(q * 100)}")
+                for i, q in enumerate(quantiles)]
+    sel += [sql_ident(f"{c}_null_rate") for c in nullable_cols]
+    sel += [sql_ident(n) for n in extra]
+    return g.selectExpr(*sel)
 
 
 def null_rate_verdicts(stats: DataFrame, col: str = "transcript",
@@ -96,31 +100,6 @@ def null_rate_verdicts(stats: DataFrame, col: str = "transcript",
     )
 
 
-def null_violations(clips: DataFrame, col: str = "transcript",
-                    max_null_rate: float = 0.005) -> DataFrame:
-    """Violation rows (clip_id, check_name, observed, expected, part) for
-    null values in ``col`` — but ONLY from partitions whose null rate breaches
-    the threshold (per-partition verdict granularity, north_rule).
-
-    The failing-partition set is computed as an aggregation and joined back
-    broadcast (tiny: <= one row per partition).  It compares the rate
-    rounded to 6 places, the value ``null_rate_verdicts`` compares, so a
-    partition lists violations exactly when its verdict fails."""
-    failing = (clips.groupBy("part")
-               .agg(F.round(F.avg(F.when(F.col(col).isNull(), 1.0)
-                                  .otherwise(0.0)), 6).alias("nr"))
-               .filter(F.col("nr") > max_null_rate)
-               .select("part"))
-    return (clips.join(F.broadcast(failing), "part")
-            .filter(F.col(col).isNull())
-            .select(
-                F.col("clip_id"),
-                F.lit(f"null_rate({col})").alias("check_name"),
-                F.lit("NULL").alias("observed"),
-                F.lit("non-null " + col).alias("expected"),
-                F.col("part")))
-
-
 def range_verdicts(stats: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
     """Per-partition pass/fail on min/max bounds (e.g. sr_hz in [8000, 48000]
     — the 0.1% injected 192 kHz outliers breach the max)."""
@@ -133,16 +112,6 @@ def range_verdicts(stats: DataFrame, col: str, lo: float, hi: float) -> DataFram
                     F.col(f"{col}_max").cast("string")).alias("observed"),
         F.lit(f"[{lo}, {hi}]").alias("expected"),
     )
-
-
-def range_violations(clips: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
-    bad = (F.col(col) < F.lit(lo)) | (F.col(col) > F.lit(hi))
-    return clips.filter(bad).select(
-        F.col("clip_id"),
-        F.lit(f"range({col})").alias("check_name"),
-        F.col(col).cast("string").alias("observed"),
-        F.lit(f"[{lo}, {hi}]").alias("expected"),
-        F.col("part"))
 
 
 # -------------------------------------------------------------------------

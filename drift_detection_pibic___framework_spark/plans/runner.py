@@ -5,9 +5,10 @@ point 1), at Iceberg-partition granularity:
 
   1. driver enumerates unprocessed partitions (manifest left-anti);
   2. the fused check suite (plans/suite.py) makes two aggregation passes
-     over the pending partitions, one filtered scan each: a groupBy(part)
-     carrying the column stats, the codec-miss count and the drift bins,
-     and a two-level (part, clip_id) -> part distinct count.  The drift
+     over the pending partitions, one filtered scan each, collected as one
+     query: a groupBy(part) carrying the column stats, the codec-miss count
+     and the drift bins, and a two-level (part, clip_id) -> part distinct
+     count.  The drift
      baseline is summed from the pass-1 rows when every baseline
      partition is pending, else it costs one bins-only aggregation over
      the baseline partitions.  The driver finalizes the collected
@@ -18,7 +19,8 @@ point 1), at Iceberg-partition granularity:
      equivalent of the reference's detector state carried across samples,
      /root/reference/utils/StreamProcessor.py:213-215);
   4. violations are listed, per check, only for the partitions whose
-     check failed, and written partition-by-partition (dynamic overwrite =
+     check failed, in one scan and one shuffle by part, and written
+     partition-by-partition (dynamic overwrite =
      idempotent), THEN the manifest row is committed (atomic rename) — the
      commit point, so a kill re-validates exactly the uncommitted suffix
      and outputs are byte-identical to an uninterrupted run (SURVEY §5
@@ -121,8 +123,8 @@ class ValidationRunner:
         for p in pending:
             shutil.rmtree(os.path.join(out, f"part={p}"), ignore_errors=True)
         if violations is not None:
-            (violations.withColumn("run_scope", F.lit(self.scope))
-             .repartition("part").write
+            # already hash-partitioned by part (suite.violation_plan)
+            (violations.withColumn("run_scope", F.lit(self.scope)).write
              .partitionBy("part").mode("overwrite")
              .option("partitionOverwriteMode", "dynamic").parquet(out))
 

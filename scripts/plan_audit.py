@@ -56,14 +56,22 @@ def main() -> int:
 
     cases = [
         # the batch check suite is two aggregation passes finalized on
-        # the driver: audit each pass's plan
+        # the driver, collected as one query; its violations are one scan
+        # with one shuffle, gated to the fixture's failing partitions
         ("suite pass 1 (fused per-partition aggregation)",
          SU.aggregate_plan(clips, dim),
          {"no_bytes_scan": True, "no_cartesian": True, "broadcast": True,
           "single_exchange": True}),
-        ("suite pass 2 (two-level distinct clip_id count)",
-         SU.distinct_plan(clips),
-         {"no_bytes_scan": True, "no_cartesian": True}),
+        ("suite query (pass 1 + the two-level distinct clip_id count, "
+         "one collect)",
+         SU.suite_plan(clips, dim),
+         {"no_bytes_scan": True, "no_cartesian": True, "broadcast": True}),
+        ("suite violations (every failing check: one scan, one shuffle)",
+         SU.violation_plan(clips, dim, {
+             "null_rate(transcript)": [2, 10], "range(sr_hz)": [2, 14],
+             "unique(clip_id)": [3, 9], "referential(codec)": [5, 11]}),
+         {"no_bytes_scan": True, "no_cartesian": True, "broadcast": True,
+          "single_exchange": True}),
         ("partition_column_stats",
          stats.partition_column_stats(clips),
          {"no_bytes_scan": True, "no_cartesian": True,

@@ -6,6 +6,7 @@ import uuid
 import numpy as np
 
 import drift_oracle
+import violation_oracle
 from drift_detection_pibic___framework_spark.operators import (
     drift_dist, referential, stats, uniqueness)
 
@@ -115,7 +116,7 @@ def test_stats_scan_prunes_bytes_column(spark, clips):
 def test_null_violations_follow_the_rounded_rate(spark):
     """10,002 null transcripts in 2,000,200 rows is a rate of 0.00500049995:
     rounded to 6 places it is the 0.005 threshold itself, so the verdict
-    passes and no violation row is listed."""
+    passes and the violation oracle lists no row either."""
     from pyspark.sql import functions as F
 
     df = spark.range(2_000_200).select(
@@ -125,7 +126,7 @@ def test_null_violations_follow_the_rounded_rate(spark):
                                       nullable_cols=("transcript",))
     v = stats.null_rate_verdicts(st).collect()
     assert [(r.part, r.passed, r.observed) for r in v] == [(0, True, "0.005")]
-    assert stats.null_violations(df).count() == 0
+    assert violation_oracle.null_violations(df).count() == 0
 
 
 def test_drift_verdict_matrix(spark, clips):
@@ -430,13 +431,16 @@ def test_fused_suite_every_violation_implies_failing_verdict(
         spark, clips, allowed_codecs):
     """Every violation row's check failed for its partition, null clip_ids
     and null codecs included, and the violations restricted to failing
-    partitions equal the unrestricted ones."""
+    partitions equal the unrestricted per-check union
+    (tests/violation_oracle.py), as does ``suite_violations``."""
     from drift_detection_pibic___framework_spark.plans import suite
 
+    assert set(violation_oracle.BUILDERS) == {
+        c.name for c in suite.CHECKS if c.breach}
     edge = _edge_clips(spark, clips)
     run = suite.collect_suite(edge, allowed_codecs)
     failing = {(v.part, v.check_name) for v in run.verdicts if not v.passed}
-    full = suite.suite_violations(edge, allowed_codecs)
+    full = violation_oracle.suite_violations(edge, allowed_codecs)
     keyed = {(r["part"], r["check_name"]) for r in
              full.select("part", "check_name").distinct().collect()}
     assert {(21, "referential(codec)"), (22, "unique(clip_id)")} <= keyed
@@ -446,7 +450,16 @@ def test_fused_suite_every_violation_implies_failing_verdict(
         return sorted(tuple("" if x is None else str(x) for x in r)
                       for r in df.collect())
     restricted = suite.failing_violations(edge, allowed_codecs, run.verdicts)
+    assert restricted.columns == list(suite.VIOLATION_COLS)
     assert rows(restricted) == rows(full)
+    assert rows(suite.suite_violations(edge, allowed_codecs)) == rows(full)
+    # nothing failing: no rows, same columns
+    clean = edge.filter("part IN (0, 1)")
+    assert suite.failing_violations(
+        clean, allowed_codecs,
+        suite.collect_suite(clean, allowed_codecs).verdicts) is None
+    none = suite.suite_violations(clean, allowed_codecs)
+    assert none.columns == list(suite.VIOLATION_COLS) and none.count() == 0
 
 
 def test_fused_suite_number_formatting_matches_spark(spark):
@@ -495,6 +508,66 @@ def test_fused_suite_plan_shape(spark, clips, allowed_codecs):
     assert len(clip_scans) <= 2, scans
     assert len(scans) - len(clip_scans) <= 1, scans
     assert "bytes" not in " ".join(re.findall(r"ReadSchema: ([^\n]*)", p1))
+    # both passes are one query, collected once, with the same scans
+    one = plan(suite.suite_plan(clips, allowed_codecs))
+    assert "Expand" not in one and not re.search(r"\(distinct ", one)
+    scans = re.findall(r"(?:FileScan|Scan) parquet [^\n]*", one)
+    clip_scans = [s for s in scans if "allowed_codecs" not in s]
+    assert len(clip_scans) <= 2, scans
+    assert len(scans) - len(clip_scans) <= 1, scans
+    assert "bytes" not in " ".join(re.findall(r"ReadSchema: ([^\n]*)", one))
+
+
+def test_violation_plan_one_scan_one_shuffle(spark, clips, allowed_codecs):
+    """The violations of every failing check come from one scan of the
+    clips and one shuffle: the duplicate window groups by (part, clip_id)
+    within the hash partitioning by part that the partitioned write
+    keeps.  The codec-miss mark is a broadcast join on the map side."""
+    import re
+
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    run = suite.collect_suite(clips, allowed_codecs)
+    assert {v.check_name for v in run.verdicts if not v.passed} >= {
+        c.name for c in suite.CHECKS if c.breach}
+    p = _plan(suite.failing_violations(clips, allowed_codecs, run.verdicts))
+    scans = re.findall(r"(?:FileScan|Scan) parquet [^\n]*", p)
+    assert len([s for s in scans if "allowed_codecs" not in s]) == 1, scans
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", p)) == 1, p
+    assert "Window" in p and "BroadcastHashJoin" in p
+
+
+def test_suite_plans_build_in_few_py4j_commands(spark, clips,
+                                                allowed_codecs):
+    """Building pass 1 and the violation plan on the fixture takes few py4j
+    commands: their expressions are SQL text, parsed in one call each,
+    where every ``Column`` call first records its Python call site in the
+    JVM.  Built from ``Column`` calls they took 2,292 (pass 1) and 915
+    (violation plan) commands; as SQL text 141 and 145."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(*a, **k):
+        sent.append(1)
+        return real(*a, **k)
+
+    def commands(fn):
+        sent.clear()
+        client.send_command = counting
+        try:
+            fn()
+        finally:
+            client.send_command = real
+        return len(sent)
+
+    verdicts = suite.collect_suite(clips, allowed_codecs).verdicts
+    assert commands(lambda: suite.aggregate_plan(clips, allowed_codecs)) \
+        <= 400
+    assert commands(lambda: suite.failing_violations(
+        clips, allowed_codecs, verdicts)) <= 300
 
 
 def test_check_registry_has_no_lazy_verdict_builders(spark):

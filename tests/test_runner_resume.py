@@ -508,15 +508,16 @@ def _rows(df):
 
 def test_runner_violations_equal_unrestricted_suite(spark, io):
     """The runner lists violations only for partitions whose check failed;
-    on the fixture that is exactly the unrestricted suite's output."""
-    from drift_detection_pibic___framework_spark.plans import suite
+    on the fixture that is exactly the unrestricted per-check union
+    (tests/violation_oracle.py)."""
+    import violation_oracle
 
     r = ValidationRunner(io, scope="restricted")
     r.run(spark)
     got = r.read_violations(spark).drop("run_scope")
     clips = io.read_table(spark, "clips")
-    want = suite.suite_violations(clips, io.read_table(spark,
-                                                       "allowed_codecs"))
+    want = violation_oracle.suite_violations(
+        clips, io.read_table(spark, "allowed_codecs"))
     cols = ["clip_id", "check_name", "observed", "expected", "part"]
     assert _rows(got.select(*cols)) == _rows(want.select(*cols))
 
@@ -588,3 +589,53 @@ def test_resume_run_aggregates_only_pending_partitions(spark, io,
     assert parts(first) == list(range(6)) and base1 is None
     assert parts(second) == list(range(6, 16))
     assert parts(base2) == list(range(16))
+
+
+def test_violation_files_schema(spark, io):
+    """Every written violation file has the same columns, types and
+    nullability: the check name, expectation and run scope are required
+    (never-null literals), the clip id and the observed value optional."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    r = ValidationRunner(io, scope="schema")
+    r.run(spark)
+    files = glob.glob(os.path.join(io.root, r.violations_table, "part=*",
+                                   "*.parquet"))
+    assert files
+    for f in files:
+        assert [(x.name, str(x.type), x.nullable)
+                for x in pq.read_schema(f)] == [
+            ("clip_id", "string", True), ("check_name", "string", False),
+            ("observed", "string", True), ("expected", "string", False),
+            ("run_scope", "string", False)], f
+
+
+def test_run_job_count(spark, io):
+    """A backfill of the fixture runs at most 10 Spark jobs: the suite
+    query (broadcast, three shuffle stages, collect), the violation plan
+    (broadcast, one shuffle stage) and its write.  It ran 14 when the two
+    passes were collected apart and each check listed its violations in
+    its own plan."""
+    from test_batch_checks import _run_counting_jobs
+
+    r = ValidationRunner(io, scope="jobs")
+    _, n_jobs = _run_counting_jobs(spark, lambda: r.run(spark))
+    assert n_jobs <= 10
+
+
+def test_engine_writes_nothing_to_stdout(spark, io, capfd):
+    """A run and a suite collect write nothing to file descriptor 1, so a
+    caller may keep its own output there (a benchmark prints its result
+    as its last line).  The JVM inherited its descriptors when it started,
+    so this covers the Python side."""
+    from drift_detection_pibic___framework_spark.plans import suite
+
+    clips = io.read_table(spark, "clips")
+    dim = io.read_table(spark, "allowed_codecs")
+    capfd.readouterr()
+    ValidationRunner(io, scope="quiet").run(spark)
+    suite.collect_suite(clips, dim)
+    assert capfd.readouterr().out == ""
